@@ -714,6 +714,8 @@ def _gram_hash_rows(
 
     import pyarrow as pa
 
+    hexw = HEX_WIDTH
+
     def _scan(batches):
         for rb in batches:
             ids = rb.column(0).to_pylist()
@@ -730,7 +732,7 @@ def _gram_hash_rows(
                 )
                 for g in grams:
                     out_gh.append(
-                        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:hexw], 16)
                     )
                 out_ids.extend([did] * len(grams))
             yield pa.RecordBatch.from_arrays(

@@ -718,24 +718,30 @@ def _chunked_d2(X, cent, chunk: int = 4096):
 
     Numerics: d2 values differ from the expanded form in the last ulps
     (different summation trees), so this kernel is for ARGMIN/ARGSORT
-    selection only — ties between bit-distinct centroids are measure-zero,
-    and bit-IDENTICAL centroids (kmeans re-seeded duplicates) still
-    produce bit-equal d2 in both forms, so first-minimal-index tie
-    resolution is unchanged. Cross-engine q36 parity is unaffected: the
-    centroids come from the SHARED kmeans_fit (both engines see the same
-    literals) and the contract-checked assignment path (<=64 lists) is
-    the sequential-fold expression plan, not this kernel."""
+    selection only — ties between bit-distinct centroids are measure-zero.
+    Bit-IDENTICAL centroids (kmeans re-seeded duplicates) are another
+    matter: BLAS GEMM may block the columns of one product differently,
+    so two equal centroids need not get bit-equal d2 columns. The kernel
+    therefore computes each distinct centroid row once and gathers the
+    columns back, which makes duplicate columns bit-equal and keeps
+    first-minimal-index tie resolution identical to the expanded form.
+    Cross-engine q36 parity is unaffected: the centroids come from the
+    SHARED kmeans_fit (both engines see the same literals) and the
+    contract-checked assignment path (<=64 lists) is the sequential-fold
+    expression plan, not this kernel."""
     import numpy as np
 
     Xq = np.ascontiguousarray(X, dtype=np.float64)
-    C = np.ascontiguousarray(cent, dtype=np.float64)
+    C, inverse = np.unique(
+        np.ascontiguousarray(cent, dtype=np.float64), axis=0, return_inverse=True
+    )
+    inverse = inverse.reshape(-1)
     c2 = (C * C).sum(axis=1)
-    out = np.empty((len(Xq), len(C)), dtype=np.float64)
+    out = np.empty((len(Xq), len(inverse)), dtype=np.float64)
     for s in range(0, len(Xq), chunk):
         B = Xq[s : s + chunk]
-        out[s : s + chunk] = (
-            (B * B).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (B @ C.T)
-        )
+        d2 = (B * B).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (B @ C.T)
+        out[s : s + chunk] = d2[:, inverse]
     return out
 
 

@@ -150,6 +150,17 @@ class Manifest:
         done = self.completed_patches()
         return tiles.join(done, ["image_id", "tile_x", "tile_y"], "left_anti")
 
+    def flag_completed(self, tiles: DataFrame) -> DataFrame:
+        """F7 resume as a flag: every work tile plus a non-null boolean
+        `done`, true when the tile is already committed. The pending set is
+        `filter(~done)`; unlike `filter_pending`, one evaluation of the
+        result also gives the done count (create_tiles materializes it once
+        and derives every count and commit from it)."""
+        done = self.completed_patches().withColumn("done", F.lit(True))
+        return tiles.join(done, ["image_id", "tile_x", "tile_y"], "left").withColumn(
+            "done", F.coalesce(F.col("done"), F.lit(False))
+        )
+
     # --- consistency (A9) ----------------------------------------------------
 
     def consistency_report(self) -> list[str]:

@@ -9,14 +9,23 @@ tiler.py:182-386, mapped in SURVEY §3.1):
   PHASE 2 (selection): greedy validation-cell selection per image (W5/W6,
     driver-side over the <= grid^2-row aggregate, reference-parity scoring).
   PHASE 3 (tiling): stride-grid explode (W1) -> per-tile label stats ->
-    patch filter (F1) -> split assignment (J9 with the selected cells) ->
-    RESUME anti-join against the manifest (F7) -> partitioned write +
-    manifest commit (R1-R3, K1/K2 analog).
+    patch filter (F1) -> split assignment (J9 with the selected cells).
+  RESUME (F7): the work tiles are flagged done/pending against the
+    manifest's committed patches and materialized ONCE, as an eager local
+    checkpoint of six scalar columns per kept tile; the total and skipped
+    counts are observed during that same evaluation. A `limit_tiles` run
+    checkpoints its ordered, limited pending set once more (small).
+  WRITE: partitioned tile write (K1/K2 analog), then the patches, images
+    and shards commits (R1-R3), all reading the checkpoint rather than
+    re-running phases 1-3; the image count is observed during the images
+    commit and the shard delta is evaluated once, by its append.
 
 Each run() is idempotent: completed (image, tile) pairs are skipped via
-the manifest anti-join, so a killed job resumes without recomputation —
-the kill/resume test in tests/test_pipeline.py asserts zero duplicates and
-identical final state.
+the manifest flag, and quarantined ids already failed in the manifest are
+not committed again, so a killed job resumes without recomputation and a
+no-op re-run commits nothing — the kill/resume test in
+tests/test_pipeline.py asserts zero duplicates and identical final state.
+Every checkpoint is released before create_tiles returns.
 """
 
 from __future__ import annotations
@@ -24,7 +33,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from geotiff_tiler_spark.operators import stats, tiling
@@ -61,102 +70,149 @@ def create_tiles(
     max_records_per_file bounds output shard size (K2 rotation analog).
     """
     manifest = Manifest(spark, manifest_dir)
+    held: list[DataFrame] = []  # eager local checkpoints, released on return
 
-    # PHASE 0: validation -> quarantine (reference process_single_pair's
-    # validate_* stages, io.py:177-235; failures land in the manifest the
-    # way failed_images does, tiler.py:427-439)
-    if validate:
-        from geotiff_tiler_spark.sources import checks
+    def materialize(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+        """One evaluation of `df`: an eager local checkpoint, plus the named
+        aggregate `metrics` observed during that same pass (no extra job)."""
+        obs = Observation()
+        if metrics:
+            df = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
+        cp = df.localCheckpoint(eager=True)
+        held.append(cp)
+        return cp, (obs.get if metrics else {})
 
-        validated = checks.validate_pages(docs)
-        docs, quarantine = checks.split_quarantine(validated)
-        if not quarantine.isEmpty():
-            qrows = quarantine.select(
-                F.col("doc_id").alias("image_id"),
-                F.lit("failed").alias("status"),
-                F.lit(0).cast("bigint").alias("kept"),
-                F.lit(0).cast("bigint").alias("discarded"),
+    try:
+        # PHASE 0: validation -> quarantine (reference process_single_pair's
+        # validate_* stages, io.py:177-235; failures land in the manifest the
+        # way failed_images does, tiler.py:427-439). Only ids the manifest
+        # does not already list as failed are committed, so a re-run adds
+        # no commit.
+        if validate:
+            from geotiff_tiler_spark.sources import checks
+
+            validated = checks.validate_pages(docs)
+            docs, quarantine = checks.split_quarantine(validated)
+            new_failed, q = materialize(
+                quarantine.select(F.col("doc_id").alias("image_id")).join(
+                    manifest.failed_images(), "image_id", "left_anti"
+                ),
+                n=F.count(F.lit(1)),
             )
-            manifest.append("images", qrows)
+            if q["n"]:
+                qrows = new_failed.select(
+                    "image_id",
+                    F.lit("failed").alias("status"),
+                    F.lit(0).cast("bigint").alias("kept"),
+                    F.lit(0).cast("bigint").alias("discarded"),
+                )
+                manifest.append("images", qrows)
 
-    # PHASE 1: analysis aggregates
-    pts = tiling.doc_points(docs, params)
-    grid_dists = stats.grid_cell_distributions(pts, params)
-    target = stats.target_distribution(stats.class_distribution(pts))
+        # PHASE 1: analysis aggregates
+        pts = tiling.doc_points(docs, params)
+        grid_dists = stats.grid_cell_distributions(pts, params)
+        target = stats.target_distribution(stats.class_distribution(pts))
 
-    # PHASE 2: validation cells — the DISTRIBUTED selector (per-image greedy
-    # inside applyInPandas; each group <= grid^2 rows). The target
-    # distribution is the only collect, and it's one row per class.
-    val_cells = stats.select_validation_cells_distributed(
-        grid_dists, params, target, params.val_ratio, strategy=val_strategy, seed=val_seed
-    )
-
-    # PHASE 3: tiling; split assignment joins against the selected-cell
-    # table (no driver-side literals — works at billions of images)
-    tiles = tiling.kept_tiles(pts, params)
-    split = tiling.assign_split_by_cells(tiles, params, val_cells)
-    work = split.select(
-        "image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px"
-    )
-
-    # RESUME: skip tiles already committed (F7)
-    total = work.count()
-    pending = manifest.filter_pending(work)
-    n_all_pending = pending.count()
-    skipped = total - n_all_pending
-    if limit_tiles is not None:
-        pending = pending.orderBy("image_id", "tile_x", "tile_y").limit(limit_tiles)
-    n_pending = pending.count() if limit_tiles is not None else n_all_pending
-    if n_pending == 0:
-        return TilingRun(kept=0, skipped_resume=skipped, images=0, commit_id=None)
-
-    # WRITE: partitioned by split (K1); shard rotation via
-    # maxRecordsPerFile (K2 - the reference's 2 GiB cap expressed as the
-    # engine-level file-size bound); registry derived from committed files
-    writer = pending.write.mode("append").partitionBy("split")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(os.path.join(out_dir, "tiles"))
-    commit_id = manifest.append("patches", pending)
-
-    # per-image status rows: `kept` is THIS COMMIT's increment for the
-    # image (a resumed image gets one row per contributing run; A9 sums
-    # completed increments, the resume anti-join guarantees no tile is
-    # counted twice)
-    per_img = pending.groupBy("image_id").agg(F.count(F.lit(1)).alias("kept"))
-    status = per_img.select(
-        "image_id",
-        F.lit("completed").alias("status"),
-        F.col("kept"),
-        F.lit(0).cast("bigint").alias("discarded"),
-    )
-    manifest.append("images", status)
-
-    # shard registry from Spark's own committed-file metadata: the hidden
-    # `_metadata` column of the parquet scan exposes file name/size, and a
-    # per-file count gives real n_records — no filesystem walk, so this
-    # works identically on local disk, HDFS, and object stores. Only files
-    # not yet registered are appended (append-mode writes add new files;
-    # prior commits' shards are already in the manifest).
-    read_back = spark.read.parquet(os.path.join(out_dir, "tiles"))
-    registry = (
-        read_back.groupBy(
-            F.col("_metadata.file_name").alias("shard_id"), F.col("split")
+        # PHASE 2: validation cells — the DISTRIBUTED selector (per-image
+        # greedy inside applyInPandas; each group <= grid^2 rows). The target
+        # distribution is the only collect, and it's one row per class.
+        val_cells = stats.select_validation_cells_distributed(
+            grid_dists, params, target, params.val_ratio, strategy=val_strategy, seed=val_seed
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.max(F.col("_metadata.file_size")).alias("size_bytes"),
-        )
-        .withColumn("status", F.lit("CLOSED"))
-        .select("shard_id", "split", "n_records", "size_bytes", "status")
-    )
-    existing = manifest.read("shards").select("shard_id").distinct()
-    new_shards = registry.join(existing, "shard_id", "left_anti")
-    if not new_shards.isEmpty():
-        manifest.append("shards", new_shards)
 
-    n_imgs = per_img.count()
-    return TilingRun(kept=n_pending, skipped_resume=skipped, images=n_imgs, commit_id=commit_id)
+        # PHASE 3: tiling; split assignment joins against the selected-cell
+        # table (no driver-side literals — works at billions of images)
+        tiles = tiling.kept_tiles(pts, params)
+        split = tiling.assign_split_by_cells(tiles, params, val_cells)
+        work = split.select(
+            "image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px"
+        )
+
+        # RESUME (F7): the work set is evaluated ONCE — geocode, grid stats,
+        # selector, split join and the manifest flag run in one eager local
+        # checkpoint (six scalar columns per kept tile) that also observes
+        # the counts; every commit below reads that checkpoint instead of
+        # re-running the plan.
+        flagged, c = materialize(
+            manifest.flag_completed(work),
+            total=F.count(F.lit(1)),
+            skipped=F.count(F.when(F.col("done"), 1)),
+        )
+        skipped = c["skipped"]
+        n_pending = c["total"] - skipped
+        pending = flagged.filter(~F.col("done")).drop("done")
+        if limit_tiles is not None:
+            n_pending = min(n_pending, limit_tiles)
+            pending, _ = materialize(
+                pending.orderBy("image_id", "tile_x", "tile_y").limit(limit_tiles)
+            )
+        if n_pending == 0:
+            return TilingRun(kept=0, skipped_resume=skipped, images=0, commit_id=None)
+
+        # WRITE: partitioned by split (K1); shard rotation via
+        # maxRecordsPerFile (K2 - the reference's 2 GiB cap expressed as the
+        # engine-level file-size bound); registry derived from committed
+        # files. Every write reads the checkpoint above.
+        writer = pending.write.mode("append").partitionBy("split")
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
+        writer.parquet(os.path.join(out_dir, "tiles"))
+        commit_id = manifest.append("patches", pending)
+
+        # per-image status rows: `kept` is THIS COMMIT's increment for the
+        # image (a resumed image gets one row per contributing run; A9 sums
+        # completed increments, the resume flag guarantees no tile is
+        # counted twice). A distributed aggregate, so the commit's file
+        # count follows the data, not defaultParallelism; the commit itself
+        # counts its rows, the run's image count.
+        per_img = pending.groupBy("image_id").agg(F.count(F.lit(1)).alias("kept"))
+        images = Observation()
+        status = per_img.select(
+            "image_id",
+            F.lit("completed").alias("status"),
+            F.col("kept"),
+            F.lit(0).cast("bigint").alias("discarded"),
+        ).observe(images, F.count(F.lit(1)).alias("n"))
+        manifest.append("images", status)
+
+        # shard registry from Spark's own committed-file metadata: the hidden
+        # `_metadata` column of the parquet scan exposes file name/size, and
+        # a per-file count gives real n_records — no filesystem walk, so this
+        # works identically on local disk, HDFS, and object stores. Only
+        # files not yet registered are appended (append-mode writes add new
+        # files; prior commits' shards are already in the manifest). The
+        # write above added at least one file, so the delta is never empty
+        # and is evaluated once, by the append. Only the partition column is
+        # read, so the scan needs no schema-inference job.
+        read_back = spark.read.schema("split string").parquet(
+            os.path.join(out_dir, "tiles")
+        )
+        registry = (
+            read_back.groupBy(
+                F.col("_metadata.file_name").alias("shard_id"), F.col("split")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_records"),
+                F.max(F.col("_metadata.file_size")).alias("size_bytes"),
+            )
+            .withColumn("status", F.lit("CLOSED"))
+            .select("shard_id", "split", "n_records", "size_bytes", "status")
+        )
+        existing = manifest.read("shards").select("shard_id").distinct()
+        manifest.append("shards", registry.join(existing, "shard_id", "left_anti"))
+
+        return TilingRun(
+            kept=n_pending,
+            skipped_resume=skipped,
+            images=images.get["n"],
+            commit_id=commit_id,
+        )
+    finally:
+        # local checkpointing truncates lineage, so release only once nothing
+        # reads the checkpoints any more; DataFrame.unpersist does not reach
+        # the RDD behind a checkpoint's LogicalRDD, so unpersist that RDD
+        for cp in held:
+            cp._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def retry_failed_images(

@@ -111,6 +111,34 @@ def test_pipeline_validate_quarantines(spark, tmp_path_factory):
     assert 100000 in failed
 
 
+def _commit_dirs(root):
+    return sorted(d for d, _, files in os.walk(root) if "_COMMITTED" in files)
+
+
+def test_validate_rerun_commits_nothing(spark, tmp_path_factory):
+    """Quarantine is idempotent: a no-op re-run with validate=True adds no
+    commit directory and leaves the failed set unchanged."""
+    from pyspark.sql import functions as F2
+
+    base = str(tmp_path_factory.mktemp("pq_idem"))
+    good = pages.synth_pages(spark, 100).select("doc_id", "url", "warc_ts", "text", "lang")
+    bad = spark.createDataFrame(
+        [(100000, "u", "2024-01-01 00:00:00", "", "en"), (100001, "u", "2024-01-01 00:00:00", "x", "xx")],
+        "doc_id long, url string, warc_ts string, text string, lang string",
+    ).withColumn("warc_ts", F2.col("warc_ts").cast("timestamp"))
+    docs = good.unionByName(bad)
+    run = pipeline.create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert run.kept > 0
+    m = Manifest(spark, f"{base}/mf")
+    failed = sorted(r.image_id for r in m.failed_images().collect())
+    assert failed == [100000, 100001]
+    dirs = _commit_dirs(f"{base}/mf")
+    rerun = pipeline.create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert rerun.kept == 0 and rerun.skipped_resume == run.kept
+    assert _commit_dirs(f"{base}/mf") == dirs
+    assert sorted(r.image_id for r in m.failed_images().collect()) == failed
+
+
 def test_shard_rotation_max_records(spark, docs, tmp_path_factory):
     import os as _os
 

@@ -8,10 +8,14 @@
 
 import os
 import shutil
+import uuid
+
+from pyspark.sql import functions as F
 
 from geotiff_tiler_spark.operators.tiling import TilingParams
 from geotiff_tiler_spark.plans.manifest import Manifest
 from geotiff_tiler_spark.plans.pipeline import create_tiles
+from geotiff_tiler_spark.sources import pages
 
 P = TilingParams(label_threshold=None)
 
@@ -130,3 +134,55 @@ def test_flagship_lifecycle_end_to_end(spark, docs, tmp_path_factory):
     assert counters["kept_run1"] == 7
     assert counters["patch_total"] > 7  # the chain processed real work
     assert counters["wds_shards"] >= 2  # split partitioning produced shards
+
+
+def _with_jobs(spark, fn):
+    """(fn(), Spark jobs it ran), counted through a job group (the status
+    tracker works with the UI off)."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_resume_evaluates_work_set_once(spark, docs, tmp_path_factory):
+    """A resume call evaluates the tiling work set once and derives every
+    count and commit from that evaluation. Re-running the lazy work plan
+    under each count, write and commit cost about 70 jobs per call; one
+    pass stays well under 35, so a re-evaluating action fails here."""
+    base = str(tmp_path_factory.mktemp("onepass"))
+    create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf", limit_tiles=7)
+    run, jobs = _with_jobs(
+        spark, lambda: create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf")
+    )
+    assert run.skipped_resume == 7 and run.kept > 0
+    assert jobs <= 35, jobs
+
+
+def test_create_tiles_releases_checkpoints(spark, tmp_path_factory):
+    """Every local checkpoint create_tiles takes is unpersisted before it
+    returns, on the writing path and on the early-return no-op path."""
+    base = str(tmp_path_factory.mktemp("leak"))
+    good = pages.synth_pages(spark, 100).select("doc_id", "url", "warc_ts", "text", "lang")
+    bad = spark.createDataFrame(
+        [(100000, "u", "2024-01-01 00:00:00", "", "en")],
+        "doc_id long, url string, warc_ts string, text string, lang string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    vdocs = good.unionByName(bad)
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    # writing call: quarantine, work-set and limited checkpoints
+    r1 = create_tiles(spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True, limit_tiles=5)
+    assert r1.kept == 5
+    assert persistent().size() == before
+    r2 = create_tiles(spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert r2.kept > 0
+    # no-op call: returns before any write
+    r3 = create_tiles(spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert r3.kept == 0 and r3.skipped_resume == r1.kept + r2.kept
+    assert persistent().size() == before
