@@ -479,8 +479,10 @@ def q23_point_in_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q24_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN via cell-ring expansion with brute-force fallback (north_rule);
-    exact result, verified against the all-pairs oracle."""
+    """Exact kNN (north_rule), verified against the all-pairs oracle: one
+    cell-histogram aggregate bounds each query's search box up front, one
+    probe join + top-k window answers inside it, and queries the bound
+    cannot confine within max_ring rings scan every point."""
     pts = tiling.doc_points(_docs_par(spark, sf_dir), P)
     queries = pts.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("query_id"),
@@ -492,10 +494,10 @@ def q24_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lon").alias("n_lon"),
         F.col("lat").alias("n_lat"),
     )
-    # res=None -> adaptive choose_res: the contract exercises the same
-    # density-derived resolution the engine would pick at scale (the result
-    # is EXACT for every res, so the oracle is unaffected — round-2
-    # VERDICT 'What's wrong #4')
+    # res=None -> the probe-volume level picked from the point histogram:
+    # the contract exercises the same density-derived resolution the
+    # engine would pick at scale (the result is EXACT for every res, so
+    # the oracle is unaffected)
     res = knn.knn_cell_ring(queries, points, k=5, res=None, max_ring=3)
     return res.withColumn("dist2", F.round(F.col("dist2"), 9))
 

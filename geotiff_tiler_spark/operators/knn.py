@@ -1,4 +1,4 @@
-"""Exact k-nearest-neighbor join via cell-ring expansion.
+"""Exact k-nearest-neighbor join: one probe inside a per-query bound.
 
 The north rule mandates kNN with cell-ring expansion + a sort-merge
 fallback; the reference has no kNN, so the semantics are pinned here and
@@ -7,31 +7,55 @@ verified against a brute-force oracle:
 - distance: squared planar Euclidean on (lon, lat) degrees (deterministic
   double arithmetic, identical in the DuckDB oracle);
 - ties: broken by neighbor id ascending;
-- self-pairs excluded;
-- EXACT result (not approximate): ring expansion terminates for a query
-  only when its current k-th candidate distance is <= the minimum possible
-  distance to any unexplored cell.
+- self-pairs excluded (neighbor ids are unique per point);
+- EXACT result (not approximate).
 
-Termination bound: after exploring Chebyshev rings 0..r around the query's
-cell, every unexplored point lies in a cell with ring index >= r+1, hence
-at planar distance >= r * min(cell_w, cell_h). If kth_dist^2 <=
-(r * min_cell)^2 the answer can no longer change.
+Up-front bound (the per-cell radius idea of Distributed Stream KNN Join,
+SIGMOD 2021). One rows-per-cell histogram of the points
+(`spatial_join.cell_histogram`) gives, for every cell c at the join
+resolution, r_c: the smallest Chebyshev window of cells
+[cx - r_c, cx + r_c] x [cy - r_c, cy + r_c] that holds >= k+1 points. For
+a query q in c, D is the distance from q to that window's farthest corner.
 
-Scale shape: each round is one equi-join points->ring-cells (the ring is a
-bounded explode of (2r+1)^2 - (2r-1)^2 = 8r cell offsets) + a per-query
-top-k window. Rounds are driver-side iterations over DataFrames; at 100 TB
-each round is fully distributed, and the number of rounds is data-density
-bounded (max_ring caps it; the remainder falls back to the brute-force
-sort-merge join on the few starved queries — e.g. queries in empty oceans).
+Exactness. Every point counted in the window lies inside the window's
+rectangle (only in-domain points, lon in [-180, 180] and lat in
+[-90, 90], are counted, so clamped edge cells hold no outside points), and
+the farthest point of a rectangle from q is one of its corners — so at
+least k+1 points lie within D of q, at least k of them other than q
+itself. Hence the k-th neighbor distance is <= D, and the k nearest
+neighbors, together with every tie at the k-th distance, lie in the box
+[q_lon +- D] x [q_lat +- D]. `geo.cell_ix`/`cell_iy` are monotone (floor
++ clamp), so every point in that box has its cell in the box's cell
+range, whatever its coordinates. Probing those cells and keeping
+dist2 <= D^2 therefore sees every point the top-k can select. D is padded
+by a relative epsilon so rounding in the corner and cell arithmetic
+cannot push a point on a cell edge out of the box.
+
+Scale shape: one histogram aggregate (4^8 cells, or 4^res for a finer res),
+numpy in the calling process for the radii (a broadcast table of at
+most 4^res rows), then ONE equi-join of the exploded query boxes against the
+cell-keyed points and ONE per-query top-k window. No rounds, no
+checkpoints, no count actions. A query whose window needs more than
+`max_ring` rings (a query in an empty region, or fewer than k+1 points
+overall), or whose coordinates are not finite, gets the whole grid as
+its box: the brute-force scan of every point, inside the same join and
+with no extra job.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotiff_tiler_spark.functions import geo
+from geotiff_tiler_spark.operators.spatial_join import HIST_HI, cell_histogram, rollup
+
+# Relative pad on the search radius D (D >= half a cell diagonal, so this
+# dwarfs the ulp-level rounding of the corner and cell arithmetic).
+_EPS = 1e-9
 
 
 def _dist2():
@@ -52,8 +76,7 @@ def knn_bruteforce(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
     """Sort-merge/broadcast fallback: all-pairs + per-query top-k.
 
     queries: (query_id, q_lon, q_lat); points: (neighbor_id, n_lon, n_lat).
-    The oracle-equivalent baseline, and the fallback for queries the ring
-    expansion starves out.
+    The oracle-equivalent baseline `knn_cell_ring` is tested against.
     """
     cand = (
         F.broadcast(queries)
@@ -64,150 +87,146 @@ def knn_bruteforce(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
     return _topk(cand, k).select("query_id", "rank", "neighbor_id", "dist2")
 
 
+def _sat(counts):
+    """Summed-area table: S[i, j] = counts[:i, :j].sum()."""
+    n = counts.shape[0]
+    s = np.zeros((n + 1, n + 1), dtype=np.int64)
+    s[1:, 1:] = counts.cumsum(axis=0).cumsum(axis=1)
+    return s
+
+
+def _window_sum(s, hx, hy):
+    """Points in the window [ix - hx, ix + hx] x [iy - hy, iy + hy]
+    (clamped to the grid) around every cell, from its summed-area table."""
+    n = s.shape[0] - 1
+    ix, iy = np.indices((n, n))
+    x0, x1 = np.maximum(ix - hx, 0), np.minimum(ix + hx, n - 1) + 1
+    y0, y1 = np.maximum(iy - hy, 0), np.minimum(iy + hy, n - 1) + 1
+    return s[x1, y1] - s[x0, y1] - s[x1, y0] + s[x0, y0]
+
+
+def _ring_radius(counts, need: int, max_ring: int):
+    """r_c per cell: the smallest window radius <= max_ring holding
+    >= need points, -1 where none does. Grows r upward and stops once
+    every cell is placed (or the window covers the grid)."""
+    n = counts.shape[0]
+    s = _sat(counts)
+    ring = np.full((n, n), -1, dtype=np.int64)
+    for r in range(min(max_ring, n - 1) + 1):
+        ring[(ring < 0) & (_window_sum(s, r, r) >= need)] = r
+        if (ring >= 0).all():
+            break
+    return ring
+
+
+def _probe_volume(counts, ring) -> int:
+    """Estimated rows one probe at this level emits: sum over cells of
+    points-in-cell (the query density proxy) x (points + cells in the
+    cell's box), with the box's radius D measured from the cell center.
+    Cells without a radius probe the whole grid: every cell and point."""
+    n = counts.shape[0]
+    cw, ch = 360.0 / n, 180.0 / n
+    half = np.maximum(ring, 0) + 0.5
+    d = np.hypot(half * cw, half * ch)
+    hx = np.ceil(d / cw - 0.5).astype(np.int64)
+    hy = np.ceil(d / ch - 0.5).astype(np.int64)
+    ix, iy = np.indices((n, n))
+    cells = (np.minimum(ix + hx, n - 1) - np.maximum(ix - hx, 0) + 1) * (
+        np.minimum(iy + hy, n - 1) - np.maximum(iy - hy, 0) + 1
+    )
+    cost = np.where(ring >= 0, _window_sum(_sat(counts), hx, hy) + cells, counts.sum() + n * n)
+    return int((counts * cost).sum())
+
+
+def _probe_res(grid, k: int, max_ring: int) -> int:
+    """The level in [2, hi] with the smallest estimated probe volume:
+    coarse levels scan many points per box, fine ones explode many cells
+    (and send sparse queries to the whole grid). Ties keep the coarser."""
+    hi = grid.shape[0].bit_length() - 1
+    vols = {}
+    for r in range(2, hi + 1):
+        counts = rollup(grid, r)
+        vols[r] = _probe_volume(counts, _ring_radius(counts, k + 1, max_ring))
+    return min(vols, key=lambda r: (vols[r], r))
+
+
 def knn_cell_ring(
     queries: DataFrame,
     points: DataFrame,
     k: int,
     res: int | None = None,
     max_ring: int = 4,
-    target_rows_per_cell: int = 2_000,
-    checkpoint_eager: bool = True,
 ) -> DataFrame:
-    """Exact kNN: iterative ring expansion, brute-force fallback for the rest.
+    """Exact kNN: one probe of each query's bounded box, brute force for
+    the queries the bound cannot confine.
 
-    Each iteration r: join still-unresolved queries to points in cells at
-    Chebyshev ring exactly r, accumulate, keep per-query top-k, resolve
-    queries whose kth distance is within the ring-r guarantee. Queries
-    still unresolved after max_ring go through `knn_bruteforce`.
+    queries: (query_id, q_lon, q_lat); points: (neighbor_id, n_lon, n_lat).
+    Output (query_id, rank, neighbor_id, dist2), identical to
+    `knn_bruteforce`. See the module docstring for the bound and its proof.
 
-    `res=None` derives the resolution from the point density
-    (spatial_join.choose_res): the coarsest level whose hottest cell stays
-    under `target_rows_per_cell`, so ring joins stay task-sized at any
-    data scale instead of relying on a fixed res=4 (256 world cells).
-    The result is EXACT for every res — only the join granularity moves.
-
-    r6: the default target dropped 100_000 -> 2_000. A ring probe emits
-    ~(2r+1)^2 * target candidate rows PER QUERY, so the old default made
-    every query scan ~9e5 rows at r=1 — measured 53.8 s at a 200k-point
-    4x-scaled corpus vs 4.2 s at target=2000 (res 2 -> 4; identical
-    output, the ring-vs-brute pytest and the q24 oracle pin exactness).
-    2000 = 400x the contract k — far above what exactness needs, far
-    below the old scan-everything regime; still data-adaptive through
-    choose_res, still capped at res hi=8 (the documented limit at
-    >= 65k-cell scales).
+    `res=None` picks the join resolution from the same histogram: the
+    level in [2, 8] with the smallest estimated probe volume
+    (`_probe_res`). The result is EXACT for every res and max_ring — they
+    move only the join granularity and the brute-force share.
     """
+    in_domain = F.col("n_lon").between(-180.0, 180.0) & F.col("n_lat").between(-90.0, 90.0)
+    grid = cell_histogram(points.filter(in_domain), "n_lon", "n_lat", max(HIST_HI, res or 0))
     if res is None:
-        from geotiff_tiler_spark.operators.spatial_join import choose_res
-
-        res = choose_res(
-            points, "n_lon", "n_lat", target_rows_per_cell=target_rows_per_cell
-        )
+        res = _probe_res(grid, k, max_ring)
     n = 1 << res
-    cell_w = 360.0 / n
-    cell_h = 180.0 / n
-    min_cell = min(cell_w, cell_h)
+    cw, ch = 360.0 / n, 180.0 / n
 
-    q = queries.withColumn("q_ix", geo.cell_ix("q_lon", res)).withColumn(
-        "q_iy", geo.cell_iy("q_lat", res)
+    # each cell's radius window as a lon/lat rectangle, for the cells that
+    # have a radius within max_ring (a broadcast table of <= 4^res rows)
+    ring = _ring_radius(rollup(grid, res), k + 1, max_ring)
+    ix, iy = np.nonzero(ring >= 0)
+    r = ring[ix, iy]
+    windows = queries.sparkSession.createDataFrame(
+        pd.DataFrame({
+            "_cell": ix * n + iy,
+            "_x0": np.maximum(ix - r, 0) * cw - 180.0,
+            "_x1": (np.minimum(ix + r, n - 1) + 1) * cw - 180.0,
+            "_y0": np.maximum(iy - r, 0) * ch - 90.0,
+            "_y1": (np.minimum(iy + r, n - 1) + 1) * ch - 90.0,
+        }),
+        "_cell long, _x0 double, _x1 double, _y0 double, _y1 double",
     )
-    p = points.withColumn("n_ix", geo.cell_ix("n_lon", res)).withColumn(
-        "n_iy", geo.cell_iy("n_lat", res)
-    ).withColumn("n_cell", geo.pack_cell("n_ix", "n_iy", res))
+    q = queries.join(
+        F.broadcast(windows),
+        geo.cell_ix("q_lon", res) * n + geo.cell_iy("q_lat", res) == F.col("_cell"),
+        "left",
+    )
+    # D: the distance to the window's farthest corner, padded. No window
+    # within max_ring, or a null/NaN/infinite D: the query's box is the
+    # whole grid, unfiltered — the brute-force scan, in the same join.
+    dx = F.greatest(F.col("q_lon") - F.col("_x0"), F.col("_x1") - F.col("q_lon"))
+    dy = F.greatest(F.col("q_lat") - F.col("_y0"), F.col("_y1") - F.col("q_lat"))
+    d_expr = F.sqrt(dx * dx + dy * dy) * (1 + _EPS)
+    q = q.select(
+        "query_id", "q_lon", "q_lat", d_expr.alias("_d"),
+        (F.col("_cell").isNull() | ~F.coalesce(d_expr < F.lit(float("inf")), F.lit(False))).alias("_all"),
+    )
+    d, full = F.col("_d"), F.col("_all")
 
-    unresolved = q
-    best: DataFrame | None = None
-    resolved_parts: list[DataFrame] = []
-    # r6: one up-front count replaces the per-round unresolved.isEmpty()
-    # action (which re-evaluated the growing anti-join chain every round);
-    # the loop now breaks on arithmetic over the per-round done counts.
-    n_unres = unresolved.count()
+    def span(cell, c):
+        """Cell range of [c - D, c + D]; the whole axis for a full box."""
+        return F.sequence(
+            F.when(full, F.lit(0)).otherwise(cell(F.col(c) - d, res)),
+            F.when(full, F.lit(n - 1)).otherwise(cell(F.col(c) + d, res)),
+        )
 
-    # r6: rings 0 and 1 probe together in the first iteration (9 offsets)
-    # when max_ring >= 1 — the r=0 round's resolution check had guard 0
-    # (see below), so running it separately only added a probe join, a
-    # top-k window and a checkpoint job before the first decisive check.
-    # The candidate set at the r=1 check is identical (top-k over the
-    # union of rings 0..1 == top-k of per-ring top-ks under the total
-    # (dist2, neighbor_id) order), so the output is unchanged.
-    start = 1 if max_ring > 0 else 0
-    for r in range(start, max_ring + 1):
-        if r == start:
-            offs = [
-                (dx, dy)
-                for dx in range(-r, r + 1)
-                for dy in range(-r, r + 1)
-            ]
-        else:
-            offs = [
-                (dx, dy)
-                for dx in range(-r, r + 1)
-                for dy in range(-r, r + 1)
-                if max(abs(dx), abs(dy)) == r
-            ]
-        off_arr = F.array([F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offs])
-        probe = (
-            unresolved.withColumn("_o", F.explode(off_arr))
-            .withColumn("_ix", F.col("q_ix") + F.col("_o.dx"))
-            .withColumn("_iy", F.col("q_iy") + F.col("_o.dy"))
-            .filter(
-                (F.col("_ix") >= 0) & (F.col("_ix") < n) & (F.col("_iy") >= 0) & (F.col("_iy") < n)
-            )
-            .withColumn("n_cell", geo.pack_cell("_ix", "_iy", res))
-            .select("query_id", "q_lon", "q_lat", "q_ix", "q_iy", "n_cell")
-        )
-        new_cand = (
-            probe.join(p.select("neighbor_id", "n_lon", "n_lat", "n_cell"), "n_cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("dist2", _dist2())
-            .select("query_id", "q_lon", "q_lat", "q_ix", "q_iy", "neighbor_id", "dist2")
-        )
-        best = new_cand if best is None else best.unionByName(new_cand)
-        # keep only per-query top-k candidates between rounds (bounds state)
-        best = _topk(best, k).drop("rank")
-        # cut lineage across rounds; eager (one job barrier per round) vs
-        # lazy (materializes under the round's first action) measured by
-        # tools/bench_knn_ab.py — BENCH/knn_ab.json records both orders.
-        # Verdict: indistinguishable on this box — in BOTH pair orders the
-        # SECOND-run variant wins (warm-state recency, ~2x), so the
-        # cadence itself is within noise. Eager stays the default: the
-        # barrier materializes `best` exactly where the loop's invariants
-        # assume it bounded.
-        best = best.localCheckpoint(eager=checkpoint_eager)
-
-        # a query is resolved when it has k candidates AND the kth distance
-        # fits inside the ring-r guarantee radius. (With ring fusion above
-        # a standalone r=0 round only exists when max_ring == 0; its
-        # guard-0 check can resolve exact-duplicate stacks, matching the
-        # pre-r6 behavior for that configuration.)
-        guard = (r * min_cell) ** 2
-        stats = best.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("n_cand"), F.max("dist2").alias("kth")
-        )
-        done_ids = stats.filter((F.col("n_cand") >= k) & (F.col("kth") <= F.lit(guard))).select(
-            "query_id"
-        )
-        done_n = done_ids.count()
-        if done_n:
-            resolved_parts.append(
-                best.join(done_ids, "query_id", "left_semi").select(
-                    "query_id", "neighbor_id", "dist2"
-                )
-            )
-            best = best.join(done_ids, "query_id", "left_anti")
-            unresolved = unresolved.join(done_ids, "query_id", "left_anti")
-            n_unres -= done_n
-        if n_unres == 0:
-            break
-    else:
-        # fallback: brute force for the starved queries
-        fb = knn_bruteforce(
-            unresolved.select("query_id", "q_lon", "q_lat"),
-            points.select("neighbor_id", "n_lon", "n_lat"),
-            k,
-        ).select("query_id", "neighbor_id", "dist2")
-        resolved_parts.append(fb)
-
-    out = resolved_parts[0]
-    for part in resolved_parts[1:]:
-        out = out.unionByName(part)
-    return _topk(out.distinct(), k).select("query_id", "rank", "neighbor_id", "dist2")
+    boxes = (
+        q.withColumn("_ix", F.explode(span(geo.cell_ix, "q_lon")))
+        .withColumn("_iy", F.explode(span(geo.cell_iy, "q_lat")))
+        .select("query_id", "q_lon", "q_lat", d, full, (F.col("_ix") * n + F.col("_iy")).alias("_cell"))
+    )
+    p = points.select(
+        "neighbor_id", "n_lon", "n_lat",
+        (geo.cell_ix("n_lon", res) * n + geo.cell_iy("n_lat", res)).alias("_cell"),
+    )
+    cand = (
+        boxes.join(p, "_cell")
+        .withColumn("dist2", _dist2())
+        .filter((F.col("query_id") != F.col("neighbor_id")) & (full | (F.col("dist2") <= d * d)))
+    )
+    return _topk(cand, k).select("query_id", "rank", "neighbor_id", "dist2")

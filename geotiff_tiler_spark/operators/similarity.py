@@ -189,8 +189,9 @@ def _cosine_pair_udf():
     """Arrow-batched pandas UDF scoring (q_vec, c_vec) PAIR rows with the
     exact SQL-fold float ops: float->double widening, left-associated
     0.0-seeded accumulation for dot and both norms, cosine =
-    dot/(q_norm*c_norm), 0.0 on zero norms — bit-identical doubles to
-    `_with_cosine_prenormed` (parity-tested via the q17/q33 paths).
+    dot/(q_norm*c_norm), 0.0 on zero norms and on null vectors —
+    bit-identical doubles to `_with_cosine_prenormed` (parity-tested via
+    the q17/q33 paths).
     Replaces the INTERPRETED 64-step fold in candidate-scoring
     projections (~10 us/pair above a join) with one vectorized batch
     pass; norms move inside the kernel, so callers ship only (id, vec)
@@ -204,10 +205,14 @@ def _cosine_pair_udf():
     from pyspark.sql.functions import pandas_udf
 
     def _cos(qv, cv):
-        if len(qv) == 0:
-            return pd.Series([], dtype="float64")
-        Q = _stack_rows(qv)
-        C = _stack_rows(cv)
+        # a pair with a null vector scores 0.0, as in the SQL fold (its
+        # null norm fails the positive-norm test)
+        ok = (qv.notna() & cv.notna()).to_numpy()
+        out = np.zeros(len(qv))
+        if not ok.any():
+            return pd.Series(out)
+        Q = _stack_rows(qv[ok])
+        C = _stack_rows(cv[ok])
         m, dim = Q.shape
         acc = np.zeros(m)
         q2 = np.zeros(m)
@@ -222,7 +227,8 @@ def _cosine_pair_udf():
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = acc / den
         cos[(qn == 0.0) | (cn == 0.0)] = 0.0
-        return pd.Series(cos)
+        out[ok] = cos
+        return pd.Series(out)
 
     return pandas_udf(_cos, "double").asNondeterministic()
 
@@ -748,6 +754,21 @@ def _chunked_d2(X, cent, chunk: int = 4096):
 _NC_SCRATCH: dict = {}
 
 
+def _nc_scratch(cols: int, rows: int, chunk: int, dtype):
+    """A cached scratch block of `_nearest_centroids` with >= rows rows
+    (allocated at chunk rows), keyed by (cols, dtype): a row-sliced view of
+    it stays C-contiguous, so matmul(out=) writes straight into cached
+    pages."""
+    import numpy as np
+
+    key = (cols, np.dtype(dtype).char)
+    buf = _NC_SCRATCH.get(key)
+    if buf is None or buf.shape[0] < rows:
+        buf = np.zeros((max(rows, chunk), cols), dtype=dtype)  # zeros: touch once here
+        _NC_SCRATCH[key] = buf
+    return buf
+
+
 def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
     """(len(X), p) indices of the p nearest centroids per row, ordered by
     (d2 asc, centroid id asc) — the selection form of `_chunked_d2` for the
@@ -772,8 +793,10 @@ def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
     the regime the expression-path parity tests compare against) use a
     full stable argsort; larger counts use argpartition + a (d2, id)
     lexsort of the selected p — same order for all bit-distinct
-    distances, with arbitrary selection only among bit-EQUAL distances
-    straddling the partition boundary (duplicated centroids).
+    distances. Bit-identical centroid rows are scored once and gathered
+    back, so duplicates tie exactly, and rows where such a tie straddles
+    the partition are re-selected by a stable argsort: every path
+    resolves duplicates to the lowest index.
 
     `dtype` (default float64) selects the distance precision: kmeans_fit
     trains with float32 (halves the bandwidth-bound argmin pass and
@@ -787,18 +810,21 @@ def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
     dtype = dtype or np.float64
     Xq = np.ascontiguousarray(X, dtype=dtype)
     C = np.ascontiguousarray(cent, dtype=dtype)
-    Ct = np.ascontiguousarray(C.T)
     nlist = len(C)
     p = min(p, nlist)
+    # Bit-identical centroid rows: as in _chunked_d2, score each distinct
+    # row once and gather the columns back, so duplicates get bit-equal
+    # distances and the selection resolves them to the first index.
+    U, inverse = np.unique(C, axis=0, return_inverse=True)
+    inverse = inverse.reshape(-1)
+    dup = len(U) < nlist
+    if dup:
+        C = U
+    Ct = np.ascontiguousarray(C.T)
     c2 = (C * C).sum(axis=1)
     rows = min(chunk, len(Xq))
-    # keyed by (nlist, dtype): a row-sliced view of a (chunk, nlist) block
-    # stays C-contiguous, so matmul(out=) writes straight into cached pages
-    key = (nlist, np.dtype(dtype).char)
-    buf = _NC_SCRATCH.get(key)
-    if buf is None or buf.shape[0] < rows:
-        buf = np.zeros((max(rows, chunk), nlist), dtype=dtype)  # zeros: touch once here
-        _NC_SCRATCH[key] = buf
+    buf = _nc_scratch(len(C), rows, chunk, dtype)
+    full = _nc_scratch(nlist, rows, chunk, dtype) if dup else None
     idx = np.empty((len(Xq), p), dtype=np.int64)
     for s in range(0, len(Xq), chunk):
         B = Xq[s : s + chunk]
@@ -807,6 +833,8 @@ def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
         blk *= -2.0
         blk += (B * B).sum(axis=1)[:, None]
         blk += c2[None, :]
+        if dup:
+            blk = np.take(blk, inverse, axis=1, out=full[: len(B)])
         if p == 1:
             idx[s : s + len(B), 0] = blk.argmin(axis=1)
         elif nlist <= IVF_EXPR_MAX_LISTS or p >= nlist:
@@ -820,7 +848,15 @@ def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
             vals = np.take_along_axis(vals, o1, axis=1)
             pi = np.take_along_axis(pi, o1, axis=1)
             o2 = np.argsort(vals, axis=1, kind="stable")
-            idx[s : s + len(B)] = np.take_along_axis(pi, o2, axis=1)
+            sel = np.take_along_axis(pi, o2, axis=1)
+            if dup:
+                # rows whose p-th distance is bit-equal to an unselected
+                # duplicate: argpartition picked among them arbitrarily,
+                # so re-select those rows by (d2, id)
+                kth = np.take_along_axis(vals, o2, axis=1)[:, -1:]
+                amb = (blk == kth).sum(axis=1) > (vals == kth).sum(axis=1)
+                sel[amb] = np.argsort(blk[amb], axis=1, kind="stable")[:, :p]
+            idx[s : s + len(B)] = sel
     return idx
 
 

@@ -123,43 +123,61 @@ def point_in_box_join(points: DataFrame, labels: DataFrame, res: int) -> DataFra
     return cand.filter(hit).select("doc_id", "feature_id", "class")
 
 
+# Finest level of the rows-per-cell histogram: 4^8 = 65,536 cells at most,
+# small to collect at any data scale because the aggregate, not the data,
+# is collected.
+HIST_HI = 8
+
+
+def cell_histogram(points: DataFrame, lon_col: str = "lon", lat_col: str = "lat", hi: int = HIST_HI):
+    """(2^hi, 2^hi) int64 grid of point counts per res-`hi` cell, indexed
+    [ix, iy] — ONE distributed rows-per-cell aggregate, collected. Points
+    with a null coordinate have no cell and are not counted."""
+    import numpy as np
+
+    ix = geo.cell_ix(F.col(lon_col), hi)
+    iy = geo.cell_iy(F.col(lat_col), hi)
+    t = (
+        points.filter(ix.isNotNull() & iy.isNotNull())
+        .groupBy(ix.alias("ix"), iy.alias("iy"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .toArrow()
+    )
+    n = 1 << hi
+    grid = np.zeros((n, n), dtype=np.int64)
+    grid[t.column("ix").to_numpy(), t.column("iy").to_numpy()] = t.column("n").to_numpy()
+    return grid
+
+
+def rollup(grid, res: int):
+    """Counts of a `cell_histogram` grid at the coarser level `res`: each
+    res-cell sums its 2^(hi-res) x 2^(hi-res) block of hi-cells."""
+    n = 1 << res
+    f = grid.shape[0] // n
+    return grid.reshape(n, f, n, f).sum(axis=(1, 3))
+
+
 def choose_res(
     points: DataFrame,
     lon_col: str = "lon",
     lat_col: str = "lat",
     target_rows_per_cell: int = 100_000,
     lo: int = 2,
-    hi: int = 8,
+    hi: int = HIST_HI,
 ) -> int:
     """Pick the coarsest cell resolution whose hottest cell holds at most
     `target_rows_per_cell` points — derived from ONE distributed
-    rows-per-cell aggregate at `hi`, rolled up to coarser levels on the
-    driver (4^hi rows collected; hi=8 -> <=65k, driver-small even at
-    10^12 points because the aggregate, not the data, is collected).
+    rows-per-cell aggregate at `hi` (`cell_histogram`), rolled up to
+    coarser levels in the calling process.
 
     Replaces the fixed res=4 default that made a hot cell one
     unsplittable cogroup at 100x density.
     """
-    counts = (
-        points.groupBy(
-            geo.cell_ix(F.col(lon_col), hi).alias("ix"),
-            geo.cell_iy(F.col(lat_col), hi).alias("iy"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    per_res: dict[int, dict[tuple[int, int], int]] = {hi: {}}
-    for r in counts:
-        per_res[hi][(r["ix"], r["iy"])] = r["n"]
-    for r in range(hi - 1, lo - 1, -1):
-        agg: dict[tuple[int, int], int] = {}
-        for (ix, iy), n in per_res[r + 1].items():
-            key = (ix // 2, iy // 2)
-            agg[key] = agg.get(key, 0) + n
-        per_res[r] = agg
-    for r in range(lo, hi + 1):
-        if per_res[r] and max(per_res[r].values()) <= target_rows_per_cell:
-            return r
+    grid = cell_histogram(points, lon_col, lat_col, hi)
+    if grid.any():
+        for r in range(lo, hi + 1):
+            if rollup(grid, r).max() <= target_rows_per_cell:
+                return r
     return hi
 
 

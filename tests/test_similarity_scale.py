@@ -202,6 +202,44 @@ def test_nearest_centroids_matches_argsort_oracle():
             assert (got == want).all(), (nlist, p)
 
 
+def test_nearest_centroids_duplicate_rows_pick_first_index():
+    """Bit-identical centroid rows (kmeans re-seeded duplicates) must tie
+    exactly and resolve to the lowest index, as the expanded-difference
+    oracle does: p=1 (argmin) and p>1 in both selection regimes (stable
+    argsort <= IVF_EXPR_MAX_LISTS, argpartition above), with queries
+    placed next to the duplicated rows so the ties straddle the p-th
+    slot."""
+    rng = np.random.default_rng(4)
+    for nlist in (8, 200):
+        C0 = rng.normal(size=(nlist, 16))
+        C = np.vstack([C0] + [C0[:3]] * 6)
+        C = C[rng.permutation(len(C))]
+        X = np.vstack([
+            rng.normal(size=(200, 16)),
+            C[rng.integers(0, len(C), 300)] + rng.normal(scale=1e-3, size=(300, 16)),
+        ])
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        for p in (1, 2, 5):
+            want = np.argsort(d2, axis=1, kind="stable")[:, :p]
+            got = similarity._nearest_centroids(X, C, p=p, chunk=100)
+            assert (got == want).all(), (nlist, p)
+
+
+def test_cosine_pair_kernel_null_vectors_match_fold(spark):
+    """A pair with a null vector must not crash the Arrow pair kernel; it
+    scores what the prenormed SQL fold gives (0.0), the other rows of the
+    batch unchanged."""
+    vec = [float(x) for x in np.random.default_rng(2).normal(size=64)]
+    pairs = spark.createDataFrame(
+        [(1, vec, None), (2, None, vec), (3, None, None), (4, vec, [v * 2 for v in vec]), (5, vec, [0.0] * 64)],
+        "id long, va array<float>, vb array<float>",
+    ).withColumn("na", similarity._norm(F.col("va"))).withColumn("nb", similarity._norm(F.col("vb")))
+    old = {r.id: r.cosine for r in similarity._with_cosine_prenormed(pairs, "va", "vb", "na", "nb").collect()}
+    new = {r.id: r.cosine for r in similarity._with_cosine_arrow(pairs, "va", "vb").collect()}
+    assert new == old
+    assert new[1] == new[2] == new[3] == 0.0 and new[4] == 1.0
+
+
 def test_cosine_topk_scan_matches_allpairs_bitexact(spark):
     """r6 q16 rewrite: the mapInArrow scan (BLAS prune + exact-fold
     re-score + margin-superset candidates) must reproduce the pure-SQL
