@@ -41,8 +41,16 @@ def class_distribution(points: DataFrame, class_col: str = "lang") -> DataFrame:
 
 def target_distribution(dist: DataFrame) -> dict[str, float]:
     """A5: global target distribution = mean of per-image fractions
-    (reference tiler.py:246-248). Driver-small (one row per class)."""
-    rows = dist.groupBy("class").agg(F.avg("frac").alias("frac")).collect()
+    (reference tiler.py:246-248). Driver-small (one row per class).
+
+    Neither keys nor values follow the shuffle layout: the greedy selector
+    sums and breaks ties in key order, so keys are sorted (a null class
+    first); a double sum depends on the order partial sums merge in, so the
+    mean is taken over fractions rounded to decimal(38,18), whose sum is
+    exact."""
+    frac = F.col("frac").cast("decimal(38,18)")
+    rows = dist.groupBy("class").agg(F.avg(frac).cast("double").alias("frac")).collect()
+    rows.sort(key=lambda r: (r["class"] is not None, r["class"] or ""))
     return {r["class"]: r["frac"] for r in rows}
 
 

@@ -19,6 +19,9 @@ Tables:
   patches/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px)
   images/  : (image_id, status, kept, discarded, commit_ts)
   shards/  : (shard_id, split, n_records, size_bytes, status)
+  work/<key>/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px) —
+    one run's full tiling work set, addressed by its input fingerprint
+    `key` rather than by a commit id; same marker protocol, written once.
 """
 
 from __future__ import annotations
@@ -64,6 +67,8 @@ SHARD_SCHEMA = sqltypes.StructType(
     ]
 )
 
+WORK_SCHEMA = sqltypes.StructType(PATCH_SCHEMA.fields[:-1])
+
 _SCHEMAS = {"patches": PATCH_SCHEMA, "images": IMAGE_SCHEMA, "shards": SHARD_SCHEMA}
 
 
@@ -105,20 +110,46 @@ class Manifest:
         commit_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
         path = os.path.join(self.root, table, commit_id)
         df.withColumn("commit_id", F.lit(commit_id)).write.mode("error").parquet(path)
-        # marker write is the commit point (readers ignore unmarked dirs);
-        # created through the Hadoop FS so the protocol is storage-agnostic
-        fs, _, jvm = self._fs(path)
-        marker = jvm.org.apache.hadoop.fs.Path(path, "_COMMITTED")
-        out = fs.create(marker, True)
-        out.write(bytearray(commit_id.encode("utf-8")))
-        out.close()
+        self._mark(path, commit_id)
         return commit_id
+
+    def _mark(self, path: str, text: str) -> None:
+        """The marker write is the commit point (readers ignore unmarked
+        dirs); created through the Hadoop FS so the protocol is
+        storage-agnostic."""
+        fs, _, jvm = self._fs(path)
+        out = fs.create(jvm.org.apache.hadoop.fs.Path(path, "_COMMITTED"), True)
+        out.write(bytearray(text.encode("utf-8")))
+        out.close()
 
     def read(self, table: str) -> DataFrame:
         dirs = self._commit_dirs(table)
         if not dirs:
             return self.spark.createDataFrame([], _SCHEMAS[table])
         return self.spark.read.schema(_SCHEMAS[table]).parquet(*dirs)
+
+    # --- keyed work sets -----------------------------------------------------
+
+    def work_set(self, key: str) -> DataFrame | None:
+        """The work set committed under `key`, or None when there is none
+        (never written, or a killed write without its marker)."""
+        path = os.path.join(self.root, "work", key)
+        fs, jpath, jvm = self._fs(path)
+        if not fs.exists(jvm.org.apache.hadoop.fs.Path(jpath, "_COMMITTED")):
+            return None
+        return self.spark.read.schema(WORK_SCHEMA).parquet(path)
+
+    def commit_work(self, key: str, df: DataFrame) -> None:
+        """Commit `df` as the work set under `key`. Called only when
+        `work_set(key)` is None, so a directory already there is a killed
+        write: it is deleted and written again."""
+        path = os.path.join(self.root, "work", key)
+        fs, jpath, _ = self._fs(path)
+        fs.delete(jpath, True)
+        df.select(*(F.col(f.name).cast(f.dataType) for f in WORK_SCHEMA)).write.mode(
+            "error"
+        ).parquet(path)
+        self._mark(path, key)
 
     # --- reference-parity views ---------------------------------------------
 

@@ -10,26 +10,40 @@ tiler.py:182-386, mapped in SURVEY §3.1):
     driver-side over the <= grid^2-row aggregate, reference-parity scoring).
   PHASE 3 (tiling): stride-grid explode (W1) -> per-tile label stats ->
     patch filter (F1) -> split assignment (J9 with the selected cells).
-  RESUME (F7): the work tiles are flagged done/pending against the
-    manifest's committed patches and materialized ONCE, as an eager local
-    checkpoint of six scalar columns per kept tile; the total and skipped
-    counts are observed during that same evaluation. A `limit_tiles` run
-    checkpoints its ordered, limited pending set once more (small).
+  RESUME (F7): the work set (every kept tile with its split, point_cnt
+    and nonzero_px) is computed once per input and committed in the
+    manifest under `work/<key>/`. The key is a sha1 over a format version,
+    a fingerprint of the docs (one aggregate job: the row count plus two
+    order-independent sums of differently salted xxhash64 row hashes over
+    the columns read here, each hashed with its null flag), the
+    TilingParams, val_strategy, val_seed and validate. A call whose key is
+    committed (a resume or a no-op re-run on the same inputs) reads the
+    work set back and skips validation and phases 1-3; any other call runs
+    them. Either way the work tiles are then flagged done/pending against
+    the manifest's committed patches and materialized ONCE, as an eager
+    local checkpoint that also observes the total and skipped counts; a
+    call that computed the work set commits it from that checkpoint. A
+    `limit_tiles` run commits the full set, then checkpoints its ordered,
+    limited pending set once more (small).
   WRITE: partitioned tile write (K1/K2 analog), then the patches, images
     and shards commits (R1-R3), all reading the checkpoint rather than
     re-running phases 1-3; the image count is observed during the images
     commit and the shard delta is evaluated once, by its append.
 
-Each run() is idempotent: completed (image, tile) pairs are skipped via
-the manifest flag, and quarantined ids already failed in the manifest are
-not committed again, so a killed job resumes without recomputation and a
-no-op re-run commits nothing — the kill/resume test in
-tests/test_pipeline.py asserts zero duplicates and identical final state.
+Commit order on a computing call: quarantine, work set, tiles, patches,
+images, shards. A call that finds its work set committed therefore finds
+its quarantine committed too, and a resume can never pick validation
+cells other than those of the run it resumes. Each run() is idempotent:
+completed (image, tile) pairs are skipped via the manifest flag, so a
+killed job resumes without recomputation and a no-op re-run commits
+nothing — the kill/resume test in tests/test_pipeline.py asserts zero
+duplicates and identical final state.
 Every checkpoint is released before create_tiles returns.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 from dataclasses import dataclass
 
@@ -47,6 +61,110 @@ class TilingRun:
     skipped_resume: int
     images: int
     commit_id: str | None
+    work_reused: bool = False  # the work set was read from the manifest
+
+
+# Bump when the work set's derivation changes, so committed sets of the
+# old derivation are no longer read back.
+WORK_FORMAT = "work-v1"
+# The docs columns create_tiles reads (validation, geocoding, class).
+_FINGERPRINT_COLS = ("doc_id", "text", "lang", "warc_ts")
+
+
+def work_key(
+    docs: DataFrame,
+    params: TilingParams,
+    val_strategy: str,
+    val_seed: int | None,
+    validate: bool,
+) -> str:
+    """Key of the work set `create_tiles` derives from these inputs.
+
+    One aggregate job fingerprints the docs: the row count plus two sums of
+    differently salted xxhash64 row hashes, so row order and partitioning do
+    not matter. Each column is hashed with its null flag (the hash skips
+    nulls, which would make (NULL, 'en') and ('en', NULL) equal), and the
+    sums are decimal because a long sum overflows under ANSI mode."""
+    cols = [c for c in _FINGERPRINT_COLS if c in docs.columns]
+    fields = [x for c in cols for x in (F.col(c).isNull(), F.col(c))]
+    n, s1, s2 = docs.agg(
+        F.count(F.lit(1)),
+        *(
+            F.sum(F.xxhash64(F.lit(salt), *fields).cast("decimal(38,0)"))
+            for salt in ("fp-a", "fp-b")
+        ),
+    ).first()
+    types = ",".join(f"{f.name}:{f.dataType.simpleString()}" for f in docs.schema if f.name in cols)
+    parts = (WORK_FORMAT, types, n, s1, s2, repr(params), val_strategy, val_seed, validate)
+    return hashlib.sha1("|".join(map(str, parts)).encode("utf-8")).hexdigest()
+
+
+def _materialize(held: list[DataFrame], df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """One evaluation of `df`: an eager local checkpoint (appended to
+    `held` for release), plus the named aggregate `metrics` observed during
+    that same pass (no extra job)."""
+    obs = Observation()
+    if metrics:
+        df = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
+    cp = df.localCheckpoint(eager=True)
+    held.append(cp)
+    return cp, (obs.get if metrics else {})
+
+
+def _analyse(
+    docs: DataFrame,
+    params: TilingParams,
+    manifest: Manifest,
+    held: list[DataFrame],
+    val_strategy: str,
+    val_seed: int | None,
+    validate: bool,
+) -> DataFrame:
+    """Validation (committing the quarantine) and phases 1-3: the lazy
+    work set (image_id, tile_x, tile_y, split, point_cnt, nonzero_px)."""
+    # PHASE 0: validation -> quarantine (reference process_single_pair's
+    # validate_* stages, io.py:177-235; failures land in the manifest the
+    # way failed_images does, tiler.py:427-439). Only ids the manifest
+    # does not already list as failed are committed, so a re-run adds
+    # no commit.
+    if validate:
+        from geotiff_tiler_spark.sources import checks
+
+        validated = checks.validate_pages(docs)
+        docs, quarantine = checks.split_quarantine(validated)
+        new_failed, q = _materialize(
+            held,
+            quarantine.select(F.col("doc_id").alias("image_id")).join(
+                manifest.failed_images(), "image_id", "left_anti"
+            ),
+            n=F.count(F.lit(1)),
+        )
+        if q["n"]:
+            qrows = new_failed.select(
+                "image_id",
+                F.lit("failed").alias("status"),
+                F.lit(0).cast("bigint").alias("kept"),
+                F.lit(0).cast("bigint").alias("discarded"),
+            )
+            manifest.append("images", qrows)
+
+    # PHASE 1: analysis aggregates
+    pts = tiling.doc_points(docs, params)
+    grid_dists = stats.grid_cell_distributions(pts, params)
+    target = stats.target_distribution(stats.class_distribution(pts))
+
+    # PHASE 2: validation cells — the DISTRIBUTED selector (per-image
+    # greedy inside applyInPandas; each group <= grid^2 rows). The target
+    # distribution is the only collect, and it's one row per class.
+    val_cells = stats.select_validation_cells_distributed(
+        grid_dists, params, target, params.val_ratio, strategy=val_strategy, seed=val_seed
+    )
+
+    # PHASE 3: tiling; split assignment joins against the selected-cell
+    # table (no driver-side literals — works at billions of images)
+    tiles = tiling.kept_tiles(pts, params)
+    split = tiling.assign_split_by_cells(tiles, params, val_cells)
+    return split.select("image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px")
 
 
 def create_tiles(
@@ -64,90 +182,48 @@ def create_tiles(
     """Run the full pipeline; returns commit summary.
 
     limit_tiles simulates a mid-job kill for resume tests: only the first
-    N pending tiles (deterministic order) are processed and committed.
+    N pending tiles (deterministic order) are processed and committed;
+    limit_tiles=0 stops right after the work-set commit.
     validate=True runs the S7 validation stage first and quarantines
     invalid rows into the manifest (as data, not exceptions).
     max_records_per_file bounds output shard size (K2 rotation analog).
     """
     manifest = Manifest(spark, manifest_dir)
+    key = work_key(docs, params, val_strategy, val_seed, validate)
     held: list[DataFrame] = []  # eager local checkpoints, released on return
 
-    def materialize(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
-        """One evaluation of `df`: an eager local checkpoint, plus the named
-        aggregate `metrics` observed during that same pass (no extra job)."""
-        obs = Observation()
-        if metrics:
-            df = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
-        cp = df.localCheckpoint(eager=True)
-        held.append(cp)
-        return cp, (obs.get if metrics else {})
-
     try:
-        # PHASE 0: validation -> quarantine (reference process_single_pair's
-        # validate_* stages, io.py:177-235; failures land in the manifest the
-        # way failed_images does, tiler.py:427-439). Only ids the manifest
-        # does not already list as failed are committed, so a re-run adds
-        # no commit.
-        if validate:
-            from geotiff_tiler_spark.sources import checks
+        work = manifest.work_set(key)
+        reused = work is not None
+        if not reused:
+            work = _analyse(docs, params, manifest, held, val_strategy, val_seed, validate)
 
-            validated = checks.validate_pages(docs)
-            docs, quarantine = checks.split_quarantine(validated)
-            new_failed, q = materialize(
-                quarantine.select(F.col("doc_id").alias("image_id")).join(
-                    manifest.failed_images(), "image_id", "left_anti"
-                ),
-                n=F.count(F.lit(1)),
-            )
-            if q["n"]:
-                qrows = new_failed.select(
-                    "image_id",
-                    F.lit("failed").alias("status"),
-                    F.lit(0).cast("bigint").alias("kept"),
-                    F.lit(0).cast("bigint").alias("discarded"),
-                )
-                manifest.append("images", qrows)
-
-        # PHASE 1: analysis aggregates
-        pts = tiling.doc_points(docs, params)
-        grid_dists = stats.grid_cell_distributions(pts, params)
-        target = stats.target_distribution(stats.class_distribution(pts))
-
-        # PHASE 2: validation cells — the DISTRIBUTED selector (per-image
-        # greedy inside applyInPandas; each group <= grid^2 rows). The target
-        # distribution is the only collect, and it's one row per class.
-        val_cells = stats.select_validation_cells_distributed(
-            grid_dists, params, target, params.val_ratio, strategy=val_strategy, seed=val_seed
-        )
-
-        # PHASE 3: tiling; split assignment joins against the selected-cell
-        # table (no driver-side literals — works at billions of images)
-        tiles = tiling.kept_tiles(pts, params)
-        split = tiling.assign_split_by_cells(tiles, params, val_cells)
-        work = split.select(
-            "image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px"
-        )
-
-        # RESUME (F7): the work set is evaluated ONCE — geocode, grid stats,
-        # selector, split join and the manifest flag run in one eager local
-        # checkpoint (six scalar columns per kept tile) that also observes
-        # the counts; every commit below reads that checkpoint instead of
+        # RESUME (F7): the work set is evaluated ONCE — read back, or
+        # geocode, grid stats, selector and split join — together with the
+        # manifest flag, in one eager local checkpoint (seven scalar
+        # columns per kept tile) that also observes the counts; the work
+        # commit and every write below read that checkpoint instead of
         # re-running the plan.
-        flagged, c = materialize(
+        flagged, c = _materialize(
+            held,
             manifest.flag_completed(work),
             total=F.count(F.lit(1)),
             skipped=F.count(F.when(F.col("done"), 1)),
         )
+        if not reused:
+            manifest.commit_work(key, flagged)
         skipped = c["skipped"]
         n_pending = c["total"] - skipped
         pending = flagged.filter(~F.col("done")).drop("done")
         if limit_tiles is not None:
             n_pending = min(n_pending, limit_tiles)
-            pending, _ = materialize(
-                pending.orderBy("image_id", "tile_x", "tile_y").limit(limit_tiles)
+            pending, _ = _materialize(
+                held, pending.orderBy("image_id", "tile_x", "tile_y").limit(limit_tiles)
             )
         if n_pending == 0:
-            return TilingRun(kept=0, skipped_resume=skipped, images=0, commit_id=None)
+            return TilingRun(
+                kept=0, skipped_resume=skipped, images=0, commit_id=None, work_reused=reused
+            )
 
         # WRITE: partitioned by split (K1); shard rotation via
         # maxRecordsPerFile (K2 - the reference's 2 GiB cap expressed as the
@@ -206,6 +282,7 @@ def create_tiles(
             skipped_resume=skipped,
             images=images.get["n"],
             commit_id=commit_id,
+            work_reused=reused,
         )
     finally:
         # local checkpointing truncates lineage, so release only once nothing

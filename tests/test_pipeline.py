@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from geotiff_tiler_spark.operators.tiling import TilingParams
 from geotiff_tiler_spark.plans.manifest import Manifest
-from geotiff_tiler_spark.plans.pipeline import create_tiles
+from geotiff_tiler_spark.plans.pipeline import create_tiles, work_key
 from geotiff_tiler_spark.sources import pages
 
 P = TilingParams(label_threshold=None)
@@ -186,3 +186,124 @@ def test_create_tiles_releases_checkpoints(spark, tmp_path_factory):
     r3 = create_tiles(spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True)
     assert r3.kept == 0 and r3.skipped_resume == r1.kept + r2.kept
     assert persistent().size() == before
+
+
+def _shard_files(spark, run_dir):
+    """(split, file) of every parquet file under out/tiles, and of every
+    file the shard registry lists."""
+    on_disk = sorted(
+        (os.path.basename(d).removeprefix("split="), f)
+        for d, _, files in os.walk(f"{run_dir}/out/tiles")
+        for f in files
+        if f.endswith(".parquet")
+    )
+    shards = Manifest(spark, f"{run_dir}/mf").read("shards").collect()
+    return on_disk, sorted((r.split, r.shard_id) for r in shards)
+
+
+def test_kill_after_work_commit_resumes_from_it(spark, docs, tmp_path_factory):
+    """A call killed after the work-set commit but before any tile write
+    (limit_tiles=0 stops there) leaves a committed work set; the resume
+    reads it back and reaches the uninterrupted run's tiles and splits."""
+    base = str(tmp_path_factory.mktemp("workcommit"))
+    full = create_tiles(spark, docs, P, f"{base}/full/out", f"{base}/full/mf")
+    r0 = create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf", limit_tiles=0)
+    assert r0.kept == 0 and r0.skipped_resume == 0 and not r0.work_reused
+    assert not os.path.exists(f"{base}/part/out/tiles")
+    key = work_key(docs, P, "spatial", 42, False)
+    assert os.path.exists(f"{base}/part/mf/work/{key}/_COMMITTED")
+
+    r1 = create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf")
+    assert r1.work_reused and r1.skipped_resume == 0 and r1.kept == full.kept
+    tiles = _collect_tiles(spark, f"{base}/part/out")
+    assert tiles == _collect_tiles(spark, f"{base}/full/out")
+    assert len({t[:3] for t in tiles}) == len(tiles)
+    on_disk, registered = _shard_files(spark, f"{base}/part")
+    assert on_disk == registered and len(set(on_disk)) == len(on_disk)
+    assert Manifest(spark, f"{base}/part/mf").consistency_report() == []
+
+
+def test_unmarked_work_dir_is_recomputed(spark, docs, tmp_path_factory):
+    """A work-set directory without its marker is a killed write: the next
+    call recomputes the work set, rewrites the directory and reaches the
+    same tiles as an uninterrupted run."""
+    base = str(tmp_path_factory.mktemp("workkill"))
+    full = create_tiles(spark, docs, P, f"{base}/full/out", f"{base}/full/mf")
+    create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf", limit_tiles=0)
+    wdir = f"{base}/part/mf/work/{work_key(docs, P, 'spatial', 42, False)}"
+    # the killed write: no marker, and only some of its files
+    os.remove(f"{wdir}/_COMMITTED")
+    parts = sorted(f for f in os.listdir(wdir) if f.endswith(".parquet"))
+    for f in parts[: max(1, len(parts) // 2)]:
+        os.remove(os.path.join(wdir, f))
+
+    r1 = create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf")
+    assert not r1.work_reused and r1.kept == full.kept
+    assert os.path.exists(f"{wdir}/_COMMITTED")
+    assert spark.read.parquet(wdir).count() == full.kept
+    assert _collect_tiles(spark, f"{base}/part/out") == _collect_tiles(
+        spark, f"{base}/full/out"
+    )
+    assert Manifest(spark, f"{base}/part/mf").consistency_report() == []
+    r2 = create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf")
+    assert r2.work_reused and r2.kept == 0 and r2.skipped_resume == full.kept
+
+
+def test_work_key_misses_on_any_input_change(spark):
+    """The work key changes with any row of the columns create_tiles reads
+    and with every argument that shapes the work set; it does not change
+    with row order, partitioning or columns create_tiles does not read."""
+    docs = pages.synth_pages(spark, 40).select("doc_id", "url", "warc_ts", "text", "lang")
+
+    def key(d, params=P, strategy="spatial", seed=42, validate=False):
+        return work_key(d, params, strategy, seed, validate)
+
+    def one_row(col, value):
+        return docs.withColumn(
+            col, F.when(F.col("doc_id") == 5, value).otherwise(F.col(col))
+        )
+
+    row5 = docs.filter("doc_id = 5")
+    base = key(docs)
+    assert key(docs.orderBy(F.desc("doc_id")).repartition(3)) == base
+    assert key(one_row("url", F.lit("elsewhere"))) == base
+    variants = {
+        "text": key(one_row("text", F.concat(F.col("text"), F.lit(" x")))),
+        "lang": key(one_row("lang", F.lit("zh"))),
+        "warc_ts": key(one_row("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 SECOND"))),
+        "doc_id": key(one_row("doc_id", F.lit(100000).cast("bigint"))),
+        "added": key(docs.unionByName(row5.withColumn("doc_id", F.lit(99).cast("bigint")))),
+        "duplicated": key(docs.unionByName(row5)),
+        "params": key(docs, params=TilingParams(label_threshold=0.1)),
+        "val_seed": key(docs, seed=7),
+        "val_strategy": key(docs, strategy="random"),
+        "validate": key(docs, validate=True),
+    }
+    assert all(v != base for v in variants.values()), variants
+    assert len(set(variants.values())) == len(variants)
+
+    # a NULL moving between two columns: the hash skips nulls, the null
+    # flags do not
+    schema = "doc_id long, text string, lang string"
+    left = spark.createDataFrame([(1, None, "en")], schema)
+    right = spark.createDataFrame([(1, "en", None)], schema)
+    assert key(left) != key(right)
+
+
+def test_resume_and_noop_read_committed_work_set(spark, docs, tmp_path_factory):
+    """Resume and no-op calls read the committed work set instead of
+    re-running validation and phases 1-3: a resume stays within 15 Spark
+    jobs and a no-op within 6 (27 and 19 when both re-ran the analysis)."""
+    base = str(tmp_path_factory.mktemp("hitjobs"))
+    create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf", limit_tiles=7)
+    resume, resume_jobs = _with_jobs(
+        spark, lambda: create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf")
+    )
+    assert resume.work_reused and resume.skipped_resume == 7 and resume.kept > 0
+    assert resume_jobs <= 15, resume_jobs
+    noop, noop_jobs = _with_jobs(
+        spark, lambda: create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf")
+    )
+    assert noop.work_reused and noop.kept == 0
+    assert noop.skipped_resume == resume.kept + 7
+    assert noop_jobs <= 6, noop_jobs

@@ -132,3 +132,31 @@ def test_target_distribution_exact_distributed_bit_parity(spark, docs):
     for n_buckets in (1, 7, 64):
         dist = stats.target_distribution_exact_distributed(pts, n_buckets=n_buckets)
         assert dist == driver  # exact ==, not approx: bit parity
+
+
+def test_target_distribution_independent_of_shuffle_partitions(spark):
+    """The target distribution's class order and values, and so the
+    selected validation cells, are the same at any shuffle partitioning."""
+    from geotiff_tiler_spark.operators import tiling
+    from geotiff_tiler_spark.operators.tiling import TilingParams
+    from geotiff_tiler_spark.sources import pages
+
+    p = TilingParams()
+    pts = tiling.doc_points(pages.synth_pages(spark, 3000), p)
+    grid = stats.grid_cell_distributions(pts, p)
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    seen = []
+    try:
+        for n in (1, 4, 7):
+            spark.conf.set(conf, str(n))
+            target = stats.target_distribution(stats.class_distribution(pts))
+            cells = stats.select_validation_cells_distributed(grid, p, target, p.val_ratio, seed=42)
+            seen.append((list(target.items()), sorted(tuple(r) for r in cells.collect())))
+    finally:
+        spark.conf.set(conf, before)
+    classes = [c for c, _ in seen[0][0]]
+    assert classes == sorted(classes) and len(classes) > 1
+    assert seen[0][1]
+    for other in seen[1:]:
+        assert other == seen[0]

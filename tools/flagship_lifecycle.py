@@ -49,6 +49,9 @@ def run_lifecycle(spark, docs, base_dir: str, kill_after: int = 7) -> dict:
     r3 = create_tiles(spark, docs, params, out_dir, mf_dir)
     assert r3.kept == 0, "resume recomputed tiles"
     assert r3.skipped_resume == r1.kept + r2.kept
+    # run 1 computes and commits the work set; the resume and the no-op
+    # read it back instead of re-running the analysis
+    assert not r1.work_reused and r2.work_reused and r3.work_reused, (r1, r2, r3)
 
     # 2) A9 consistency: the three manifest-side counters
     manifest = Manifest(spark, mf_dir)
