@@ -339,9 +339,11 @@ def select_validation_cells_for_images(
 ) -> dict[int, set[str]]:
     """Run the selector per image over the collected A2 aggregate.
 
-    The aggregate is <= images * grid^2 rows; at 10^12 docs this would be
-    collected per partition of images (mapInPandas over grouped images) —
-    here the driver loop suffices and keeps bit-parity trivially.
+    The aggregate is <= images * grid^2 * classes rows, all collected to
+    the driver. This is the selector `plans.pipeline.create_tiles` uses:
+    at the pipeline's image counts the collect is small and the loop runs
+    no Python worker. Past what a driver holds, use
+    `select_validation_cells_distributed`, bit-identical by test.
     """
     rows = grid_dists.collect()
     per_img: dict[int, dict[str, dict[str, float]]] = {}
@@ -394,8 +396,9 @@ def select_validation_cells_distributed(
 
     `select_validation_cells_for_images` collects every image's cells to
     the driver — fine at thousands of images, impossible at billions. This
-    variant is the one the flagship pipeline uses; bit-parity with the
-    driver version is asserted in tests/test_stats.py.
+    variant is the scale path (each group pays the Python worker and
+    pandas per-group cost instead); `create_tiles` uses the driver one,
+    and bit-parity between the two is asserted in tests/test_stats.py.
     """
     import pandas as pd
 

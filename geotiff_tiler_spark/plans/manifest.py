@@ -123,9 +123,14 @@ class Manifest:
         out.close()
 
     def read(self, table: str) -> DataFrame:
+        """Every committed row of `table`. A table with no commit reads as
+        an empty relation Catalyst can see (`PruneFilters` turns the false
+        filter into an empty LocalRelation), so the joins, aggregates and
+        anti-joins over it fold away and no task runs; the bare
+        `createDataFrame([])` would run as a Python-RDD stage."""
         dirs = self._commit_dirs(table)
         if not dirs:
-            return self.spark.createDataFrame([], _SCHEMAS[table])
+            return self.spark.createDataFrame([], _SCHEMAS[table]).where(F.lit(False))
         return self.spark.read.schema(_SCHEMAS[table]).parquet(*dirs)
 
     # --- keyed work sets -----------------------------------------------------
@@ -157,29 +162,37 @@ class Manifest:
         """Per-image completed patch set (reference tiling_manifest.py:148-152)."""
         return self.read("patches").select("image_id", "tile_x", "tile_y").distinct()
 
+    def _latest_status(self) -> DataFrame:
+        """(image_id, status) of each image's latest commit (max commit_id):
+        a resumed or retried image has one row per commit that touched it,
+        and only the last one says where it stands."""
+        img = self.read("images")
+        last = img.groupBy("image_id").agg(F.max("commit_id").alias("commit_id"))
+        return img.join(last, ["image_id", "commit_id"]).select("image_id", "status")
+
     def completed_images(self) -> DataFrame:
         """Images whose status is completed; an image marked in_progress by a
         dead run does NOT count (reference resets in-progress on load,
         tiling_manifest.py:658-659)."""
-        img = self.read("images")
-        last = img.groupBy("image_id").agg(F.max("commit_id").alias("commit_id"))
-        latest = img.join(last, ["image_id", "commit_id"])
-        return latest.filter(F.col("status") == "completed").select("image_id")
+        return self._latest_status().filter(F.col("status") == "completed").select("image_id")
 
     def failed_images(self) -> DataFrame:
-        img = self.read("images")
-        last = img.groupBy("image_id").agg(F.max("commit_id").alias("commit_id"))
-        return (
-            img.join(last, ["image_id", "commit_id"])
-            .filter(F.col("status") == "failed")
-            .select("image_id")
-        )
+        return self._latest_status().filter(F.col("status") == "failed").select("image_id")
 
     def filter_pending(self, tiles: DataFrame) -> DataFrame:
         """F7 resume: anti-join work tiles against completed patches —
-        the engine's skip-completed-tiles logic (reference tiler.py:781-784)."""
-        done = self.completed_patches()
-        return tiles.join(done, ["image_id", "tile_x", "tile_y"], "left_anti")
+        the engine's skip-completed-tiles logic (reference tiler.py:781-784).
+
+        The plan keeps its anti-join on a manifest with no patch commit too
+        (test_plans::test_antijoin_resume_is_join_not_collect pins that
+        shape): the done side is then an empty range, which runs in the JVM
+        but which Catalyst, unlike the empty `read`, does not fold away."""
+        keys = ["image_id", "tile_x", "tile_y"]
+        if self._commit_dirs("patches"):
+            done = self.completed_patches()
+        else:
+            done = self.spark.range(0).select(*(F.col("id").alias(k) for k in keys))
+        return tiles.join(done, keys, "left_anti")
 
     def flag_completed(self, tiles: DataFrame) -> DataFrame:
         """F7 resume as a flag: every work tile plus a non-null boolean
@@ -199,28 +212,34 @@ class Manifest:
         tiling_manifest.py:734-797): per-image kept totals vs patch rows vs
         shard record totals. Returns list of issue strings (empty == clean).
         """
-        issues: list[str] = []
-        patches = self.read("patches")
-        images = self.read("images")
-        shards = self.read("shards")
-
-        patch_total = patches.select("image_id", "tile_x", "tile_y").distinct().count()
         # per-image `kept` rows are PER-COMMIT INCREMENTS (a killed run
         # commits some of an image's tiles, the resume commits the rest,
         # each with its own status row) — sum across all completed rows,
         # not just each image's latest commit, or resumed images
-        # under-count (caught by the flagship lifecycle test)
-        image_kept = (
-            images.filter(F.col("status") == "completed")
-            .agg(F.sum("kept"))
-            .collect()[0][0]
-            or 0
+        # under-count (caught by the flagship lifecycle test). The three
+        # counters are one aggregate over the union of the three tables,
+        # fetched by one collect.
+        patch = F.struct("image_id", "tile_x", "tile_y").alias("patch")
+        patches = self.read("patches").select(patch)
+        kept = self.read("images").filter(F.col("status") == "completed").select("kept")
+        records = self.read("shards").select(F.col("n_records").alias("records"))
+        c = (
+            patches.unionByName(kept, allowMissingColumns=True)
+            .unionByName(records, allowMissingColumns=True)
+            .agg(
+                F.count_distinct("patch").alias("patches"),
+                F.sum("kept").alias("kept"),
+                F.sum("records").alias("records"),
+            )
+            .collect()[0]
         )
+        patch_total, image_kept, shard_records = c["patches"], c["kept"] or 0, c["records"] or 0
+
+        issues: list[str] = []
         if patch_total != image_kept:
             issues.append(
                 f"patch rows ({patch_total}) != sum of per-image kept ({image_kept})"
             )
-        shard_records = shards.agg(F.sum("n_records")).collect()[0][0] or 0
         if shard_records and shard_records != patch_total:
             issues.append(
                 f"shard records ({shard_records}) != patch rows ({patch_total})"

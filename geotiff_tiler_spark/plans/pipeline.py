@@ -3,11 +3,20 @@
 Spark lifecycle of the reference's `Tiler.create_tiles()` (reference
 tiler.py:182-386, mapped in SURVEY §3.1):
 
-  PHASE 1 (analysis): geocode + cell/pixel encode (narrow, codegen) ->
-    per-image class distribution (A1) and per-grid-cell distributions (A2)
-    -> global target distribution (A5, driver-small).
+  PHASE 1 (analysis): ONE scan of the docs evaluates validation (when
+    asked) and geocode + cell/pixel encode (narrow, codegen) into an eager
+    local checkpoint of (doc_id, lang, image_id, px, py[, status]). The
+    quarantine, the per-image class distribution (A1), the per-grid-cell
+    distributions (A2) and the kept tiles all read that checkpoint; the
+    global target distribution (A5) is a driver collect of one row per
+    class.
   PHASE 2 (selection): greedy validation-cell selection per image (W5/W6,
-    driver-side over the <= grid^2-row aggregate, reference-parity scoring).
+    reference-parity scoring) on the driver, over the collected A2
+    aggregate: at most images x grid^2 x classes rows (16 images x 16
+    cells x 5 classes at most on the benchmark's tile_resume). The chosen
+    (image_id, cell_key) rows re-enter the plan as an Arrow-encoded pandas
+    frame that the JVM decodes, so a first call starts no Python worker;
+    on a fresh manifest the empty manifest tables fold away as well.
   PHASE 3 (tiling): stride-grid explode (W1) -> per-tile label stats ->
     patch filter (F1) -> split assignment (J9 with the selected cells).
   RESUME (F7): the work set (every kept tile with its split, point_cnt
@@ -47,6 +56,7 @@ import hashlib
 import os
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -121,17 +131,25 @@ def _analyse(
     validate: bool,
 ) -> DataFrame:
     """Validation (committing the quarantine) and phases 1-3: the lazy
-    work set (image_id, tile_x, tile_y, split, point_cnt, nonzero_px)."""
+    work set (image_id, tile_x, tile_y, split, point_cnt, nonzero_px).
+
+    The docs are scanned once: validation and geocoding are evaluated into
+    one narrow checkpoint that the quarantine, the analysis aggregates and
+    the kept tiles all read."""
     # PHASE 0: validation -> quarantine (reference process_single_pair's
     # validate_* stages, io.py:177-235; failures land in the manifest the
-    # way failed_images does, tiler.py:427-439). Only ids the manifest
-    # does not already list as failed are committed, so a re-run adds
-    # no commit.
+    # way failed_images does, tiler.py:427-439).
+    cols = ["doc_id", "lang", "image_id", "px", "py"]
     if validate:
         from geotiff_tiler_spark.sources import checks
 
-        validated = checks.validate_pages(docs)
-        docs, quarantine = checks.split_quarantine(validated)
+        docs = checks.validate_pages(docs)
+        cols.append("status")
+    pts, _ = _materialize(held, tiling.doc_points(docs, params).select(*cols))
+    if validate:
+        pts, quarantine = checks.split_quarantine(pts)
+        # Only ids the manifest does not already list as failed are
+        # committed, so a re-run adds no commit.
         new_failed, q = _materialize(
             held,
             quarantine.select(F.col("doc_id").alias("image_id")).join(
@@ -149,19 +167,26 @@ def _analyse(
             manifest.append("images", qrows)
 
     # PHASE 1: analysis aggregates
-    pts = tiling.doc_points(docs, params)
     grid_dists = stats.grid_cell_distributions(pts, params)
     target = stats.target_distribution(stats.class_distribution(pts))
 
-    # PHASE 2: validation cells — the DISTRIBUTED selector (per-image
-    # greedy inside applyInPandas; each group <= grid^2 rows). The target
-    # distribution is the only collect, and it's one row per class.
-    val_cells = stats.select_validation_cells_distributed(
+    # PHASE 2: validation cells, picked on the driver from the A2 aggregate
+    # (at most images x grid^2 x classes rows). The chosen cells return as
+    # an Arrow-encoded pandas frame (get_spark turns Arrow on), which the
+    # JVM decodes: no Python worker runs anywhere in the work set's plan.
+    chosen = stats.select_validation_cells_for_images(
         grid_dists, params, target, params.val_ratio, strategy=val_strategy, seed=val_seed
+    )
+    val_cells = docs.sparkSession.createDataFrame(
+        pd.DataFrame(
+            [(img, ck) for img, cells in chosen.items() for ck in cells],
+            columns=["image_id", "cell_key"],
+        ),
+        "image_id long, cell_key string",
     )
 
     # PHASE 3: tiling; split assignment joins against the selected-cell
-    # table (no driver-side literals — works at billions of images)
+    # table
     tiles = tiling.kept_tiles(pts, params)
     split = tiling.assign_split_by_cells(tiles, params, val_cells)
     return split.select("image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px")

@@ -10,6 +10,7 @@ import os
 import shutil
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from geotiff_tiler_spark.operators.tiling import TilingParams
@@ -307,3 +308,140 @@ def test_resume_and_noop_read_committed_work_set(spark, docs, tmp_path_factory):
     assert noop.work_reused and noop.kept == 0
     assert noop.skipped_resume == resume.kept + 7
     assert noop_jobs <= 6, noop_jobs
+
+
+def _pages_with_one_invalid(spark, n=100):
+    """n synthetic pages plus one with empty text, which validation
+    quarantines."""
+    good = pages.synth_pages(spark, n).select("doc_id", "url", "warc_ts", "text", "lang")
+    bad = spark.createDataFrame(
+        [(100000, "u", "2024-01-01 00:00:00", "", "en")],
+        "doc_id long, url string, warc_ts string, text string, lang string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    return good.unionByName(bad)
+
+
+def test_empty_manifest_tables_fold_away(spark, tmp_path_factory):
+    """A table with no commit optimizes to an empty LocalRelation that no
+    Python RDD evaluates, so the status views and the resume join over a
+    fresh manifest fold away and run no task."""
+    m = Manifest(spark, str(tmp_path_factory.mktemp("fold")))
+    for table in ("patches", "images", "shards"):
+        qe = m.read(table)._jdf.queryExecution()
+        plan = qe.optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+        assert plan.data().isEmpty()
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
+    for view in (m.failed_images(), m.completed_images()):
+        plan = view._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    tiles = spark.range(3).select(
+        F.col("id").alias("image_id"), F.col("id").alias("tile_x"), F.col("id").alias("tile_y")
+    )
+    flagged = m.flag_completed(tiles)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in flagged, flagged
+
+
+def test_analyse_work_set_runs_no_python(spark, tmp_path_factory):
+    """The first call's work set (validation, analysis, selector, split
+    join) has no Python-evaluated node and no Python RDD in its lineage:
+    validation cells are picked on the driver and come back through Arrow."""
+    from geotiff_tiler_spark.plans.pipeline import _analyse
+
+    m = Manifest(spark, str(tmp_path_factory.mktemp("nopython")))
+    held = []
+    try:
+        work = _analyse(_pages_with_one_invalid(spark), P, m, held, "spatial", 42, True)
+        qe = work._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
+        assert work.count() > 0
+    finally:
+        for cp in held:
+            cp._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def test_first_call_scans_docs_once(spark, tmp_path_factory):
+    """A first call on a fresh manifest evaluates validation and geocoding
+    once, folds the empty manifest reads and picks validation cells on the
+    driver: 25 Spark jobs on this input, where re-scanning the docs per
+    aggregate, the Python-evaluated empty reads and the applyInPandas
+    selector cost 32."""
+    base = str(tmp_path_factory.mktemp("firstjobs"))
+    vdocs = _pages_with_one_invalid(spark)
+    run, jobs = _with_jobs(
+        spark,
+        lambda: create_tiles(spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True),
+    )
+    assert not run.work_reused and run.kept > 0
+    assert jobs <= 28, jobs
+
+
+def test_all_quarantined_docs_keep_nothing(spark, tmp_path_factory):
+    """Docs that all fail validation: every id is quarantined, no tile is
+    written, the manifest stays consistent and a re-run commits nothing."""
+    base = str(tmp_path_factory.mktemp("allbad"))
+    bad = pages.synth_pages(spark, 100).select("doc_id", "url", "warc_ts", "text", "lang")
+    bad = bad.withColumn("text", F.lit(""))
+    r1 = create_tiles(spark, bad, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert (r1.kept, r1.skipped_resume, r1.images) == (0, 0, 0)
+    assert not os.path.exists(f"{base}/out/tiles")
+    m = Manifest(spark, f"{base}/mf")
+    assert sorted(r.image_id for r in m.failed_images().collect()) == list(range(100))
+    assert m.consistency_report() == []
+    n_commits = len(os.listdir(f"{base}/mf/images"))
+    r2 = create_tiles(spark, bad, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert r2.work_reused and (r2.kept, r2.skipped_resume) == (0, 0)
+    assert len(os.listdir(f"{base}/mf/images")) == n_commits
+
+
+def test_empty_docs_keep_nothing(spark, docs, tmp_path_factory):
+    """Empty docs choose no validation cell: the empty selection still
+    enters the plan with its schema, and the call keeps nothing, with and
+    without validation."""
+    base = str(tmp_path_factory.mktemp("nodocs"))
+    vempty = pages.synth_pages(spark, 10).select("doc_id", "url", "warc_ts", "text", "lang")
+    cases = (("plain", docs.limit(0), False), ("valid", vempty.limit(0), True))
+    for name, empty, validate in cases:
+        out, mf = f"{base}/{name}/out", f"{base}/{name}/mf"
+        r1 = create_tiles(spark, empty, P, out, mf, validate=validate)
+        assert (r1.kept, r1.skipped_resume, r1.images, r1.work_reused) == (0, 0, 0, False)
+        assert not os.path.exists(f"{out}/tiles")
+        m = Manifest(spark, mf)
+        assert m.failed_images().count() == 0 and m.consistency_report() == []
+        r2 = create_tiles(spark, empty, P, out, mf, validate=validate)
+        assert r2.work_reused and (r2.kept, r2.skipped_resume) == (0, 0)
+
+
+@pytest.mark.parametrize("strategy,n_val", [("spatial", 302), ("random", 82)])
+def test_selector_strategy_matches_distributed_selector(
+    spark, docs, tmp_path_factory, strategy, n_val
+):
+    """create_tiles' driver-side selector gives the tiles and splits of the
+    distributed applyInPandas selector, for both strategies (402 tiles on
+    this fixture; 302 val for spatial, 82 for random with seed 42)."""
+    from geotiff_tiler_spark.operators import stats, tiling
+
+    base = str(tmp_path_factory.mktemp(f"sel-{strategy}"))
+    run = create_tiles(
+        spark, docs, P, f"{base}/out", f"{base}/mf", val_strategy=strategy, val_seed=42
+    )
+    pts = tiling.doc_points(docs, P)
+    cells = stats.select_validation_cells_distributed(
+        stats.grid_cell_distributions(pts, P),
+        P,
+        stats.target_distribution(stats.class_distribution(pts)),
+        P.val_ratio,
+        strategy=strategy,
+        seed=42,
+    )
+    want = sorted(
+        (r.image_id, r.tile_x, r.tile_y, r.split, r.point_cnt)
+        for r in tiling.assign_split_by_cells(tiling.kept_tiles(pts, P), P, cells).collect()
+    )
+    got = _collect_tiles(spark, f"{base}/out")
+    assert got == want
+    assert run.kept == len(got) == 402
+    assert sum(t[3] == "val" for t in got) == n_val
