@@ -30,11 +30,6 @@ HEX_WIDTH = 15
 HASH_SPACE = 1 << 60
 
 
-def md5_hex(col: Column) -> Column:
-    """md5 hex digest of a string column (32 hex chars)."""
-    return F.md5(F.col(col) if isinstance(col, str) else col)
-
-
 def portable_hash64(col: Column, pos: int = 1) -> Column:
     """60-bit non-negative hash from md5 hex chars [pos, pos+15).
 
@@ -59,16 +54,6 @@ def seeded_hash64(col: Column, seed: int) -> Column:
 def portable_hash64_sql(expr: str, pos: int = 1) -> str:
     """DuckDB SQL text equivalent of `portable_hash64`."""
     return f"(('0x' || substr(md5({expr}), {pos}, {HEX_WIDTH}))::BIGINT)"
-
-
-def seeded_hash64_sql(expr: str, seed: int) -> str:
-    """DuckDB SQL text equivalent of `seeded_hash64`."""
-    return f"(('0x' || substr(md5('{seed}:' || {expr}), 1, {HEX_WIDTH}))::BIGINT)"
-
-
-def spark_hash64_sql(expr: str, pos: int = 1) -> str:
-    """Spark SQL text equivalent of `portable_hash64` (for spark.sql strings)."""
-    return f"CAST(conv(substr(md5({expr}), {pos}, {HEX_WIDTH}), 16, 10) AS BIGINT)"
 
 
 def py_hash64(value: str, pos: int = 1) -> int:

@@ -34,10 +34,3 @@ def json_bigint_sql(expr: str, path: str) -> str:
     return f"TRY_CAST(json_extract_string({expr}, '{path}') AS BIGINT)"
 
 
-def json_string(col, path: str) -> Column:
-    """Extract `path` from a JSON string column as a string (NULL if absent)."""
-    return F.get_json_object(_c(col), path)
-
-
-def json_string_sql(expr: str, path: str) -> str:
-    return f"json_extract_string({expr}, '{path}')"

@@ -131,10 +131,6 @@ def token_count(text_col) -> Column:
     return F.size(tokens(text_col)).cast("bigint")
 
 
-def token_count_sql(expr: str) -> str:
-    return f"CAST(len({tokens_sql(expr)}) AS BIGINT)"
-
-
 # --- shingles ---------------------------------------------------------------
 
 
@@ -203,24 +199,6 @@ def quality_metrics(df, text_col: str = "text"):
     )
 
 
-def quality_metrics_sql(expr: str = "text") -> dict[str, str]:
-    toks = tokens_sql(expr)
-    stops = ", ".join(f"'{s}'" for s in STOPWORDS["en"])
-    n_tok = f"CAST(len({toks}) AS BIGINT)"
-    stop_cnt = f"CAST(len(list_filter({toks}, x -> x IN ({stops}))) AS BIGINT)"
-    return {
-        "n_tokens": n_tok,
-        "punct_cnt": (
-            f"CAST(length({expr}) - length(regexp_replace({expr}, '[.!?,;:]', '', 'g')) AS BIGINT)"
-        ),
-        "stop_cnt": stop_cnt,
-        "tok_chars": f"CAST(list_sum(list_transform({toks}, x -> length(x))) AS BIGINT)",
-        "stop_ratio": (
-            f"CASE WHEN {n_tok} > 0 THEN {stop_cnt}::DOUBLE / {n_tok} ELSE 0.0 END"
-        ),
-    }
-
-
 # --- language id ------------------------------------------------------------
 
 
@@ -244,19 +222,6 @@ def predict_lang(text_col) -> Column:
     return F.when(max_s == 0, F.lit("und")).otherwise(out)
 
 
-def predict_lang_sql(expr: str) -> str:
-    toks = tokens_sql(expr)
-    score = {}
-    for lang, words in STOPWORDS.items():
-        lst = ", ".join(f"'{w}'" for w in words)
-        score[lang] = f"CAST(len(list_filter({toks}, x -> x IN ({lst}))) AS BIGINT)"
-    max_s = "GREATEST(" + ", ".join(score[lang] for lang in LANG_ORDER) + ")"
-    branches = " ".join(
-        f"WHEN {score[lang]} = {max_s} THEN '{lang}'" for lang in LANG_ORDER
-    )
-    return f"CASE WHEN {max_s} = 0 THEN 'und' {branches} ELSE 'und' END"
-
-
 # --- fingerprint ------------------------------------------------------------
 
 
@@ -274,14 +239,6 @@ def doc_fingerprint(text_col, k: int = 3, seed: int = 0) -> Column:
         ).cast("bigint"),
     )
     return F.coalesce(F.array_min(hashed), F.lit(0).cast("bigint"))
-
-
-def doc_fingerprint_sql(expr: str, k: int = 3, seed: int = 0) -> str:
-    sh = shingles_sql(expr, k)
-    return (
-        f"COALESCE(list_min(list_transform({sh}, "
-        f"s -> ('0x' || substr(md5('{seed}:' || s), 1, {HEX_WIDTH}))::BIGINT)), 0)"
-    )
 
 
 # --- repetition (Gopher-style intra-doc filters) ----------------------------

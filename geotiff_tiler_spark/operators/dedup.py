@@ -551,20 +551,6 @@ def lsh_bucket_sql(band: int, rows_per_band: int = ROWS_PER_BAND) -> str:
     return f"('0x' || substr(md5({cols}), 1, {HEX_WIDTH}))::BIGINT"
 
 
-def simhash_sql(expr: str = "text", bits: int = SIMHASH_BITS) -> str:
-    toks = T.tokens_sql(expr)
-    hashed = f"list_transform({toks}, t -> ('0x' || substr(md5(t), 1, {HEX_WIDTH}))::BIGINT)"
-    terms = []
-    for b in range(bits):
-        pw = 1 << b
-        bit_sum = (
-            f"list_sum(list_transform({hashed}, "
-            f"h -> CASE WHEN (h & {pw}) <> 0 THEN 1 ELSE -1 END))"
-        )
-        terms.append(f"CASE WHEN COALESCE({bit_sum}, 0) > 0 THEN {pw} ELSE 0 END")
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
 def decontamination_hits(
     docs: DataFrame,
     eval_mod: int = 50,
@@ -639,8 +625,10 @@ def duplicate_clusters(
     Scale shape: the edge set is the OUTPUT of the refine stage —
     candidate-volume, a sliver of the corpus — so each round is one
     equi-join + groupBy-min on a bounded frame, localCheckpointed to keep
-    lineage flat (the kNN ring-round pattern). Rounds = graph diameter;
-    near-clique duplicate groups converge in 1-2. For adversarial
+    lineage flat. Rounds = graph diameter + 1 (the last one observes the
+    fixpoint); near-clique duplicate groups converge in 2-3. A graph that
+    has not converged after `max_rounds` raises RuntimeError rather than
+    return split components. For adversarial
     long-chain graphs at extreme scale, switch to alternating
     large-star/small-star rounds (Kiveris et al., "Connected Components
     in MapReduce", SoCC 2014) — same fixpoint, O(log^2 n) rounds; the
@@ -686,6 +674,11 @@ def duplicate_clusters(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"duplicate_clusters: labels still changing after max_rounds={max_rounds} "
+            "rounds; the graph's diameter exceeds the round cap"
+        )
     return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
@@ -770,8 +763,9 @@ def dup_gram_stats(
       (doc_id unique).
     The gram rows are deliberately recomputed by the two branches rather
     than persisted: corpus-sized intermediates follow the fused-recompute
-    rule (see scale_job.run_ivf_stage), not the bounded-intermediate
-    localCheckpoint rule of ngram_jaccard_pairs.
+    rule (persisting wide corpus-sized rows costs more than recomputing
+    them), not the bounded-intermediate localCheckpoint rule of
+    ngram_jaccard_pairs.
 
     Docs with fewer than k tokens have no spans and are excluded (both
     engines agree by construction). Output: doc_id, n_grams,

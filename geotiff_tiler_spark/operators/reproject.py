@@ -57,14 +57,6 @@ def reproject_points(
     return fn(xs, ys)
 
 
-def reproject_rings(rings, src_crs: str, dst_crs: str):
-    out = []
-    for r in rings:
-        x, y = reproject_points(r[:, 0], r[:, 1], src_crs, dst_crs)
-        out.append(np.stack([x, y], axis=1))
-    return out
-
-
 def reproject_raster_nearest(
     src: np.ndarray,
     src_transform: tuple[float, float, float, float],  # (x0, dx, y0, dy)

@@ -29,8 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EMB_DIM = 64
-SIGN_BITS = 4  # legacy single-bucket scheme: 2^4 = 16 LSH buckets
-ANN_BANDS = 4  # banded scheme: independent sign-bit bands (union of matches)
+ANN_BANDS = 4  # independent sign-bit bands (union of matches)
 # Near-dup blocking uses MORE bands than ANN top-k: a pair at cosine t
 # agrees with a random hyperplane w.p. p = 1 - acos(t)/pi, with a whole
 # b-bit band w.p. p^b, and with ANY of L bands w.p. 1 - (1-p^b)^L — at the
@@ -105,21 +104,13 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    """cosine(a, b) rounded to 6 decimals; 0.0 when either norm is 0."""
-    d = _dot(F.col(a), F.col(b))
-    na, nb = _norm(F.col(a)), _norm(F.col(b))
-    cos = F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
-    return df.withColumn(out, F.round(cos, 6))
-
-
 def _with_cosine_prenormed(
     df: DataFrame, a: str, b: str, na: str, nb: str, flat: bool = False
 ) -> DataFrame:
     """cosine from a pre-joined pair with per-ROW norms already computed.
 
-    Identical float ops to `with_cosine` (sqrt(dot(v,v)) then d/(na*nb)),
-    but each vector's norm is evaluated once per row instead of once per
+    Identical float ops to `cosine_sql` (sqrt(dot(v,v)) then d/(na*nb)),
+    with each vector's norm evaluated once per row instead of once per
     PAIR — a ~3x cut of the pair-volume work in the all-pairs stage.
     Bit-identical results -> same oracles.
 
@@ -396,54 +387,6 @@ def cosine_topk(
     )
 
 
-def sign_bucket(vec_col, bits: int = SIGN_BITS):
-    """LSH bucket id from the sign of the first `bits` coordinates."""
-    acc = F.lit(0)
-    for j in range(bits):
-        acc = acc + F.when(
-            F.element_at(F.col(vec_col) if isinstance(vec_col, str) else vec_col, j + 1)
-            > 0,
-            F.lit(1 << j),
-        ).otherwise(F.lit(0))
-    return acc.cast("bigint")
-
-
-def lsh_ann_topk(
-    emb: DataFrame,
-    k: int = 5,
-    query_mod: int = 25,
-    bits: int = SIGN_BITS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k restricted to the query's LSH bucket (equi-join scale path)."""
-    from pyspark.sql.window import Window
-
-    bucketed = emb.withColumn("bucket", sign_bucket(vec_col, bits))
-    q = bucketed.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-        "bucket",
-    )
-    c = bucketed.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-        "bucket",
-    )
-    joined = q.join(c, "bucket").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = _with_cosine_prenormed(joined, "q_vec", "c_vec", "q_norm", "c_norm")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
 # Quantization scale for integer-exact hyperplane projections: multiplying
 # a double by a power of two and flooring are both EXACT IEEE operations, so
 # Spark (numpy int64), DuckDB (BIGINT) and any other engine compute the
@@ -657,11 +600,6 @@ def cosine_sql(a: str, b: str, dim: int = EMB_DIM) -> str:
         f"ROUND(CASE WHEN {na} > 0 AND {nb} > 0 THEN ({d}) / ({na} * {nb}) "
         f"ELSE 0.0 END, 6)"
     )
-
-
-def sign_bucket_sql(vec: str, bits: int = SIGN_BITS) -> str:
-    terms = [f"CASE WHEN {vec}[{j + 1}] > 0 THEN {1 << j} ELSE 0 END" for j in range(bits)]
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
 def hp_band_bucket_sql(vec: str, band: int, bits: int, dim: int = EMB_DIM) -> str:

@@ -1,10 +1,11 @@
-"""The data-bound scale workload used for the N vs 4N scaling evidence.
+"""Synthetic scale workloads: the engine's load-bearing operators end to
+end over generated inputs at millions of rows.
 
 The correctness suite at sf0.1 is dominated by fixed per-stage overheads
-(hundreds of ms per stage on sub-MB inputs), which makes strong-scaling
-measurements meaningless. This job synthesizes the north-rule pages table
-at millions of rows (sources/pages.synth_pages — pure JVM codegen, no I/O)
-and runs the engine's load-bearing operators end-to-end:
+(hundreds of ms per stage on sub-MB inputs), so scale behaviour needs
+inputs synthesized in the JVM (sources/pages.synth_pages — pure codegen,
+no I/O). run_scale_workload (the spark-submit job, tools/submit_job.py)
+runs:
 
   1. extract_text from html (the per-url invariant path)
   2. geocode + cell/pixel encode + stride-grid tiling + F1 filter + split
@@ -15,7 +16,9 @@ and runs the engine's load-bearing operators end-to-end:
 Throughput metric = (tiles + join output rows) / sec — the BASELINE.json
 metric shape. All stages are shuffle-light: the tiling aggregate and the
 dedup aggregates are partial+final hash aggs; the spatial join is a cell
-equi-join; minhash is explode + hash agg.
+equi-join; minhash is explode + hash agg. synth_embeddings and synth_crawl
+generate the similarity and URL-tier inputs; run_urlgraph_stage times the
+URL/graph curation tier.
 """
 
 from __future__ import annotations
@@ -138,244 +141,6 @@ def synth_embeddings(spark: SparkSession, n: int, dim: int | None = None):
     return df.select("vec_id", emb.alias("embedding"))
 
 
-def _warm_session(spark, warm_rows: int = 50_000) -> None:
-    """Untimed JVM/worker warmup for the similarity stage runners — the
-    exact analog of ``bench.run_headline``'s warmup queries, scaled to the
-    operators these stages exercise. A COLD local session pays one-time
-    costs that are NOT the operator's: Janino compilation + JIT of the
-    wide flat-expression codegen methods, the spawn + numpy import of all
-    32 Python UDF workers, and — dominant on this VM, where fresh pages
-    first-touch at ~70 MB/s — the first commit of JVM heap/Arrow/shuffle
-    memory. Profiled at 1M rows: the identical topk plan runs 26-50 s on
-    first execution and ~10 s on the next, same session, same data, steal
-    < 2% throughout. A long-running cluster executor (the thing the 100-TB
-    number predicts) is always warm, so the stage runners warm up on a
-    small slice (5% of the corpus, full operator chain: UDF assign +
-    probes join + cosine + window) and start the clock after."""
-    from geotiff_tiler_spark.operators import similarity
-
-    wemb = synth_embeddings(spark, warm_rows)
-    wcent = similarity.train_ivf_centroids(
-        wemb, n_clusters=96, sample=2048
-    )  # >64 lists: same Arrow-UDF branch as the measured stage
-    similarity.ivf_topk(
-        wemb, k=5, query_mod=warm_rows // 50, n_clusters=96, nprobe=2,
-        n=warm_rows, centroids=wcent,
-    ).count()
-
-
-def _warm_session_pq(spark, warm_rows: int = 50_000) -> None:
-    """PQ twin of _warm_session: same one-time costs, exercised through
-    the PQ operators (codebook train + the mapInArrow corpus scan +
-    bounded final window) on a 5% slice, untimed."""
-    from geotiff_tiler_spark.operators import similarity
-
-    wemb = synth_embeddings(spark, warm_rows)
-    wbooks = similarity.pq_train_codebooks(wemb, sample=2048)
-    similarity.pq_topk(
-        wemb, k=5, query_mod=warm_rows // 50, books=wbooks
-    ).count()
-
-
-def run_ivf_stage(
-    spark: SparkSession,
-    n_rows: int = 1_000_000,
-    query_mod: int = 1000,
-    persist: bool = False,
-    warm: bool = True,
-) -> dict:
-    """Measured number for the >64-list IVF branch (round-3 VERDICT task 6):
-    at n_rows >= 1 M the adaptive list count is 4*sqrt(n) = 4000 > 64, so
-    ivf_assign and the query probes take the broadcast-numpy Arrow-UDF
-    path (similarity.py IVF_EXPR_MAX_LISTS). Returns timings + counts.
-
-    Two timed phases (round-4 VERDICT 'What's wrong #1' fixes):
-      train — driver k-means on the bounded 32k sample;
-      topk  — ONE fused corpus pass (assignment UDF + norm in a single
-              projection — the asNondeterministic marker stops Catalyst
-              re-evaluating the UDF below the join's isnotnull filter)
-              feeding the probe join (probes force-broadcast: the corpus
-              never moves) + flat-expression cosine + per-query window.
-    One-time session warmup (JIT, worker spawn, heap first-touch) runs
-    UNTIMED on a 50k slice first — see _warm_session; run_headline does
-    the same for the sf0.1 suite.
-
-    The index is deliberately NOT persisted/written here: on this VM
-    caching 1M deserialized array rows costs 120-160 s to materialize and
-    the cache READ of wide array rows is slower than regenerating the
-    pure-codegen generator (profiled: the one-pass index build reads
-    0.8 s unpersisted vs 1.6 s from cache), so persist defaults to
-    False — kept as an A/B knob. At 100 TB the index IS written
-    (similarity.ivf_write_index: cluster-partitioned parquet, probe scans
-    dynamic-partition-pruned); local-mode storage would measure the VM's
-    allocator, not the operator."""
-    from geotiff_tiler_spark.operators import similarity
-
-    emb = synth_embeddings(spark, n_rows)
-    if persist:
-        emb = emb.persist()
-        emb.count()  # materialize: stage times the IVF work, not the generator
-    if warm:
-        _warm_session(spark)
-    t0 = time.time()
-    nlist = similarity.adaptive_ivf_clusters(n_rows)
-    cent = similarity.train_ivf_centroids(emb, n_clusters=nlist)
-    t_train = time.time()
-    index = similarity.ivf_build_index(emb, cent)
-    topk = similarity.ivf_topk(
-        emb, k=5, query_mod=query_mod, n_clusters=nlist, nprobe=2, n=n_rows,
-        centroids=cent, index=index,
-    )
-    n_out = topk.count()
-    t1 = time.time()
-    sec = round(t1 - t0, 2)
-    if persist:
-        emb.unpersist()
-    return {
-        "n_rows": n_rows,
-        "nlist": nlist,
-        "udf_path": nlist > 64,
-        "topk_rows": n_out,
-        "sec_train": round(t_train - t0, 2),
-        "sec_topk": round(t1 - t_train, 2),
-        "sec": sec,
-        "rows_per_sec": round(n_rows / sec, 1) if sec > 0 else None,
-        "persist": persist,
-        "warm": warm,
-    }
-
-
-def run_pq_stage(
-    spark: SparkSession,
-    n_rows: int = 1_000_000,
-    query_mod: int = 1000,
-    persist: bool = False,
-    warm: bool = True,
-) -> dict:
-    """Measured number for the PQ (product-quantization) ANN path at the
-    same 1M-row scale as run_ivf_stage — the compressed-corpus
-    alternative: the corpus never materializes a float index at all; one
-    mapInPandas pass encodes each partition to 8-byte codes and emits the
-    exact per-partition (adc, id)-lexicographic top-k per query.
-
-    Two timed phases, mirroring the IVF stage:
-      train — per-subspace k-means codebooks on the bounded sorted sample
-              (m=8 subspaces x ksub=16 centroids x 8 dims: ~100x less
-              driver arithmetic than IVF's 4000-list k-means);
-      topk  — the single corpus pass + the bounded final window
-              (n_partitions x k rows per query).
-    One-time session warmup (JIT, worker spawn, heap first-touch) runs
-    UNTIMED on a 50k slice first — see _warm_session_pq; persist defaults
-    to False for the same measured reason as run_ivf_stage (cache READ of
-    wide array rows loses to regenerating the pure-codegen synth)."""
-    from geotiff_tiler_spark.operators import similarity
-
-    emb = synth_embeddings(spark, n_rows)
-    if persist:
-        emb = emb.persist()
-        emb.count()  # materialize: stage times the PQ work, not the generator
-    if warm:
-        _warm_session_pq(spark)
-    t0 = time.time()
-    books = similarity.pq_train_codebooks(emb)
-    t_train = time.time()
-    topk = similarity.pq_topk(emb, k=5, query_mod=query_mod, books=books)
-    n_out = topk.count()
-    t1 = time.time()
-    sec = round(t1 - t0, 2)
-    if persist:
-        emb.unpersist()
-    return {
-        "n_rows": n_rows,
-        "m": similarity.PQ_M,
-        "ksub": similarity.PQ_KSUB,
-        "topk_rows": n_out,
-        "sec_train": round(t_train - t0, 2),
-        "sec_topk": round(t1 - t_train, 2),
-        "sec": sec,
-        "rows_per_sec": round(n_rows / sec, 1) if sec > 0 else None,
-        "persist": persist,
-        "warm": warm,
-    }
-
-
-def _warm_session_ivfpq(spark, warm_rows: int = 50_000, nlist: int = 4000) -> None:
-    """IVF-PQ twin of _warm_session: exercises both Arrow-UDF paths the
-    measured stage uses (fused assign+pack projection, probe UDF, ADC
-    UDF) plus the probe join and the bounded window, on a 5% slice,
-    untimed — same one-time JIT/worker-spawn/heap-first-touch rationale.
-
-    Warms at the PRODUCTION list count: _nearest_centroids caches its
-    (chunk, nlist) scratch per (nlist, dtype) key, so a 96-list warmup
-    leaves every worker's 4000-wide block to first-touch INSIDE the
-    measured window (~32 MB/worker at ~70 MB/s on this VM). The warm
-    centroids are seeded noise — assignment quality is irrelevant to
-    buffer/JIT warmup — while the codebooks are really trained (cheap)."""
-    import numpy as np
-
-    from geotiff_tiler_spark.operators import similarity
-
-    wemb = synth_embeddings(spark, warm_rows)
-    wcent = np.random.RandomState(0).randn(nlist, similarity.EMB_DIM)
-    wbooks = similarity.pq_train_codebooks(wemb, sample=2048)
-    similarity.ivfpq_topk(
-        wemb, k=5, query_mod=warm_rows // 50, n_clusters=nlist, nprobe=2,
-        n=warm_rows, centroids=wcent, books=wbooks,
-    ).count()
-
-
-def run_ivfpq_stage(
-    spark: SparkSession,
-    n_rows: int = 1_000_000,
-    query_mod: int = 1000,
-    warm: bool = True,
-) -> dict:
-    """Measured number for the composed IVF-PQ path at the same 1M-row
-    scale as run_ivf_stage / run_pq_stage — the shape that holds at
-    10^12 rows: IVF prunes the corpus to nprobe/nlist per query AND the
-    probe join's corpus side is 8-byte codes instead of 64-double
-    vectors, so the one corpus pass (assign + encode in a single
-    projection) is the only place a float vector ever exists.
-
-    Two timed phases, mirroring the component stages:
-      train — the 4000-list coarse k-means plus the m=8 x ksub=16
-              codebooks, both on the shared bounded sorted sample;
-      topk  — the fused assign+encode corpus pass feeding the
-              force-broadcast probe join, the candidates-only ADC
-              projection, and the bounded per-query window.
-    Same untimed session warmup and no-persist reasoning as the
-    component stages (_warm_session_ivfpq / run_ivf_stage docstring)."""
-    from geotiff_tiler_spark.operators import similarity
-
-    emb = synth_embeddings(spark, n_rows)
-    nlist = similarity.adaptive_ivf_clusters(n_rows)
-    if warm:
-        _warm_session_ivfpq(spark, nlist=nlist)
-    t0 = time.time()
-    cent = similarity.train_ivf_centroids(emb, n_clusters=nlist)
-    books = similarity.pq_train_codebooks(emb)
-    t_train = time.time()
-    topk = similarity.ivfpq_topk(
-        emb, k=5, query_mod=query_mod, n_clusters=nlist, nprobe=2, n=n_rows,
-        centroids=cent, books=books,
-    )
-    n_out = topk.count()
-    t1 = time.time()
-    sec = round(t1 - t0, 2)
-    return {
-        "n_rows": n_rows,
-        "nlist": nlist,
-        "m": similarity.PQ_M,
-        "ksub": similarity.PQ_KSUB,
-        "topk_rows": n_out,
-        "sec_train": round(t_train - t0, 2),
-        "sec_topk": round(t1 - t_train, 2),
-        "sec": sec,
-        "rows_per_sec": round(n_rows / sec, 1) if sec > 0 else None,
-        "warm": warm,
-    }
-
-
 def synth_crawl(spark: SparkSession, n_pages: int):
     """n_pages deterministic crawl rows in the documents-table shape the
     URL tier consumes (doc_id, text, lang, source, n_chars) — pure JVM
@@ -407,16 +172,14 @@ def run_urlgraph_stage(
     recorded before they existed stay pool-comparable with new ones
     (same rule that keeps the N-vs-4N pool honest).
 
-    DELIBERATELY SEPARATE from run_scale_workload: the N-vs-4N scaling
-    gate's sample pool asserts output parity across pooled commits, so
-    its timed path stays frozen; this stage gets its own sampler
-    (tools/bench_urlgraph_sample.py -> BENCH/urlgraph_samples.jsonl)."""
+    Kept separate from run_scale_workload so that workload's timed path
+    and outputs stay comparable with its recorded samples."""
     from geotiff_tiler_spark.functions import url as U
     from geotiff_tiler_spark.operators import crawl, graph
 
     if warm:
         # one-time session costs (JIT of the wide canonicalization
-        # codegen, heap first-touch — see _warm_session) on a 5% slice,
+        # codegen, Python worker spawn, heap first-touch) on a 5% slice,
         # untimed: 8M cold 43.6 s vs warm 9.6 s on identical plans
         run_urlgraph_stage(spark, max(n_pages // 20, 6000), warm=False)
     docs = synth_crawl(spark, n_pages)

@@ -80,28 +80,3 @@ def clear_persistent_rdds(spark: SparkSession) -> int:
     return n
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver-generated parquet tables as temp views.
-
-    Returns a dict name -> DataFrame. Column pruning / predicate pushdown
-    reach the parquet scan because these are plain `spark.read.parquet`
-    relations (check with .explain: PushedFilters / ReadSchema).
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -9,7 +9,7 @@ from geotiff_tiler_spark.operators import stats
 from geotiff_tiler_spark.operators.tiling import TilingParams, doc_points
 from geotiff_tiler_spark.plans import pipeline
 from geotiff_tiler_spark.plans.manifest import Manifest
-from geotiff_tiler_spark.sources import checks, pages
+from geotiff_tiler_spark.sources import checks, pages, readers
 
 P = TilingParams(label_threshold=None)
 
@@ -80,7 +80,8 @@ def test_csv_index_and_stats_json(spark, docs, tmp_path_factory):
         tiling.filter_patches(tiling.full_tile_grid(pts, P), P).filter("keep"), P
     )
     pipeline.write_csv_index(tiles, base)
-    idx = spark.read.option("sep", ";").csv(f"{base}/csv_index")
+    idx = readers.read_csv_index(spark, base)
+    assert set(idx.columns) == {"split", "image_key", "label_key"}
     assert idx.count() == tiles.count()
 
     sdf = stats.running_band_stats(

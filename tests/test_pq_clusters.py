@@ -4,6 +4,7 @@ independent pure-Python/numpy oracles."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from geotiff_tiler_spark.operators import dedup, similarity
@@ -309,3 +310,23 @@ def test_duplicate_clusters_ignores_edge_direction(spark):
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {r.doc_id: r.cluster_id for r in dedup.duplicate_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 5: 1, 8: 8, 9: 8}
+
+
+def _path_pairs(spark, n: int, first: int = 100):
+    edges = [(first + i, first + i + 1) for i in range(n - 1)]
+    return spark.createDataFrame(edges, "doc_a long, doc_b long")
+
+
+def test_duplicate_clusters_path_within_round_cap_is_one_cluster(spark):
+    """A 15-node path (diameter 14) converges inside the default 20 rounds
+    into one cluster labelled with its minimum id."""
+    got = dedup.duplicate_clusters(_path_pairs(spark, 15)).collect()
+    assert len(got) == 15
+    assert {r.cluster_id for r in got} == {100}
+
+
+def test_duplicate_clusters_raises_at_round_cap(spark):
+    """A 30-node path (diameter 29) cannot converge in 20 rounds: the call
+    raises instead of returning the path split into partial clusters."""
+    with pytest.raises(RuntimeError, match="max_rounds=20"):
+        dedup.duplicate_clusters(_path_pairs(spark, 30))

@@ -119,19 +119,26 @@ def test_distributed_selector_matches_driver(spark, docs):
     assert got_r == driver_r
 
 
-def test_target_distribution_exact_distributed_bit_parity(spark, docs):
-    """Round-4 VERDICT item 3: the distributed exact-rational A5 must
-    produce BIT-identical doubles to the driver-collect variant (Fraction
-    arithmetic is exact, so bucketing/order cannot change the result) —
-    across different bucket counts too."""
+def test_target_distribution_exact_bit_parity_across_shuffle_partitions(spark, docs):
+    """The exact-rational A5 (the q28 oracle's target) is bit-identical,
+    keys sorted, at any shuffle partitioning: Fraction arithmetic is exact,
+    so the order the per-(image, class) rows arrive in cannot change it."""
     from geotiff_tiler_spark.operators import tiling
     from geotiff_tiler_spark.operators.tiling import TilingParams
 
     pts = tiling.doc_points(docs, TilingParams())
-    driver = stats.target_distribution_exact_from_points(pts)
-    for n_buckets in (1, 7, 64):
-        dist = stats.target_distribution_exact_distributed(pts, n_buckets=n_buckets)
-        assert dist == driver  # exact ==, not approx: bit parity
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    seen = []
+    try:
+        for n in (1, 7, 64):
+            spark.conf.set(conf, str(n))
+            seen.append(stats.target_distribution_exact_from_points(pts))
+    finally:
+        spark.conf.set(conf, before)
+    assert len(seen[0]) > 1 and list(seen[0]) == sorted(seen[0])
+    for dist in seen[1:]:
+        assert list(dist.items()) == list(seen[0].items())  # exact ==: bit parity
 
 
 def test_target_distribution_independent_of_shuffle_partitions(spark):
