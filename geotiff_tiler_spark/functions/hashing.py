@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 
 # Number of hex chars used per carved hash.
 HEX_WIDTH = 15
-# Max value + 1 of a carved hash (2^60).
-HASH_SPACE = 1 << 60
 
 
 def portable_hash64(col: Column, pos: int = 1) -> Column:

@@ -29,8 +29,6 @@ STOPWORDS = {
 }
 LANG_ORDER = ("en", "fr", "de", "es")  # tie-break: first wins
 
-PUNCT_CLASS = r"[^.!?,;:]"  # chars deleted when counting punctuation
-
 
 def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col

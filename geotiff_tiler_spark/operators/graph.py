@@ -15,8 +15,7 @@ keyed on src — the edge table's own partitioning, so AQE reuses it) +
 one map-side-combined agg by dst + one bounded left join against the
 host universe. State after each round is a host-sized frame; rounds
 are lazily localCheckpointed so lineage does NOT grow with iteration
-count (the kNN ring-round pattern, knn.py, with the lazy variant the
-dedup fan-out rule established). The edges+out_deg frame and the
+count (the lazy variant the dedup fan-out rule established). The edges+out_deg frame and the
 universe frame are each consumed every round, so both are
 materialized once up front.
 

@@ -1,36 +1,38 @@
 """Manifest / checkpoint tables — the reference's TilingManifest re-expressed
 as committed columnar state (reference tiling_manifest.py:62-208, 583-617).
 
-The reference keeps a single JSON file with atomic tmp+rename writes and
-in-memory counters saved every N patches. The Spark-native equivalent is a
-set of append-only parquet *commit directories* with an explicit commit
-marker — the same atomicity contract as the reference's rename (a commit is
-visible only after its marker lands), but per-partition lineage rides along:
-every committed row carries its (image_id, commit_id), so a killed job
-resumes by anti-joining work against committed state (reference
-tiler.py:214-217, 781-784 -> F7).
+The reference keeps a single JSON file with atomic tmp+rename writes. Here
+a write is a *commit*: each table's rows go to `<root>/commit_id=<id>/`,
+then ONE marker `commits/<id>/_COMMITTED` records the tables written, the
+tile root and the work key. The marker is written aside and renamed into
+place; readers list markers, never data directories, so a kill mid-write
+never corrupts state (R3). On a real deployment this is an Iceberg snapshot
+commit (SURVEY D6/K8); the Hadoop-FS marker keeps the engine
+dependency-free. The id is `c<seq>-<hex>`: the zero-padded sequence number
+leads, so ids sort in commit order without a clock (one writer at a time),
+and the `c` keeps partition inference reading it as a string.
 
-On a real deployment these become Iceberg tables (snapshot commit ==
-marker); the directory-marker protocol keeps the engine dependency-free
-while preserving semantics. Readers ignore uncommitted directories, so a
-kill mid-write never corrupts state (R3).
-
-Tables:
-  patches/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px)
-  images/  : (image_id, status, kept, discarded, commit_ts)
-  shards/  : (shard_id, split, n_records, size_bytes, status)
+Tables (every row carries its commit_id):
+  patches/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px) — the
+    committed tile files themselves, `<tiles>/commit_id=<id>/split=<s>/`:
+    a run's `out/tiles` (`commit_tiles`), or the manifest's own `patches/`
+    (`append`)
+  images/  : (image_id, status, kept, discarded)
+  shards/  : (shard_id, split, n_records, size_bytes, status), one row per
+    tile file
   work/<key>/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px) —
     one run's full tiling work set, addressed by its input fingerprint
-    `key` rather than by a commit id; same marker protocol, written once.
+    `key` rather than by a commit id; its own marker, written once.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import time
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as sqltypes
 
@@ -79,7 +81,7 @@ class Manifest:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        for t in _SCHEMAS:
+        for t in ("commits", *_SCHEMAS):
             fs, jpath, _ = self._fs(os.path.join(root, t))
             fs.mkdirs(jpath)  # no-op if it exists (Hadoop-FS mkdir -p)
 
@@ -93,45 +95,110 @@ class Manifest:
         jpath = jvm.org.apache.hadoop.fs.Path(path)
         return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jpath, jvm
 
-    def _commit_dirs(self, table: str) -> list[str]:
-        fs, base, jvm = self._fs(os.path.join(self.root, table))
-        if not fs.exists(base):
-            return []
+    def _commits(self) -> list[dict]:
+        """The marker record of every commit, in commit order."""
+        fs, base, jvm = self._fs(os.path.join(self.root, "commits"))
         out = []
-        for st in fs.listStatus(base):
-            if st.isDirectory():
-                marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_COMMITTED")
-                if fs.exists(marker):
-                    out.append(st.getPath().toString())
-        return sorted(out)
+        for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(base, "*/_COMMITTED")) or []:
+            stream = fs.open(st.getPath())
+            try:
+                out.append(json.loads(bytes(stream.readAllBytes())))
+            finally:
+                stream.close()
+            out[-1]["commit_id"] = st.getPath().getParent().getName()
+        return sorted(out, key=lambda c: c["commit_id"])
+
+    def _begin(self) -> str:
+        """A fresh commit id; marked commits hold sequence numbers 1..n."""
+        return f"c{len(self._commits()) + 1:010d}-{uuid.uuid4().hex[:8]}"
+
+    def _write(self, table: str, df: DataFrame, cid: str, root=None, max_records=None) -> str:
+        """`cid`'s rows of `table` into `<root>/commit_id=<cid>/`: tiles are
+        partitioned by split (K1), files bounded by `max_records` (K2)."""
+        path = os.path.join(root or os.path.join(self.root, table), f"commit_id={cid}")
+        writer = df.write.mode("error")
+        if max_records:
+            writer = writer.option("maxRecordsPerFile", str(max_records))
+        (writer.partitionBy("split") if table == "patches" else writer).parquet(path)
+        return path
+
+    def _mark(self, path: str, record: dict) -> None:
+        """The commit point: `path/_COMMITTED` holding `record`, written
+        aside and renamed through the Hadoop FS, so a reader sees the whole
+        record or no commit."""
+        fs, jpath, jvm = self._fs(path)
+        tmp, marker = (jvm.org.apache.hadoop.fs.Path(jpath, n) for n in ("_tmp", "_COMMITTED"))
+        out = fs.create(tmp, True)
+        out.write(bytearray(json.dumps(record).encode("utf-8")))
+        out.close()
+        if not fs.rename(tmp, marker):
+            raise OSError(f"could not commit {marker}")
 
     def append(self, table: str, df: DataFrame) -> str:
-        """Write one commit: parquet dir + marker (atomic visibility, R3)."""
-        commit_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        path = os.path.join(self.root, table, commit_id)
-        df.withColumn("commit_id", F.lit(commit_id)).write.mode("error").parquet(path)
-        self._mark(path, commit_id)
-        return commit_id
+        """A one-table commit: data directory, then marker."""
+        cid = self._begin()
+        self._write(table, df, cid)
+        self._mark(os.path.join(self.root, "commits", cid), {"tables": [table]})
+        return cid
 
-    def _mark(self, path: str, text: str) -> None:
-        """The marker write is the commit point (readers ignore unmarked
-        dirs); created through the Hadoop FS so the protocol is
-        storage-agnostic."""
-        fs, _, jvm = self._fs(path)
-        out = fs.create(jvm.org.apache.hadoop.fs.Path(path, "_COMMITTED"), True)
-        out.write(bytearray(text.encode("utf-8")))
-        out.close()
+    def commit_tiles(self, out_dir: str, tiles: DataFrame, max_records=None, work_key=None):
+        """One run's commit (R1-R3), returning (commit id, images): its
+        tiles, written once to `out_dir/tiles/commit_id=<id>/`, per-image
+        status rows (`kept` is this commit's increment, which A9 sums), the
+        shard rows of its own tile files (one `_metadata` aggregate: file
+        name and size plus a per-file count), then the marker. First it
+        deletes the data of commits that never got a marker, so a resume
+        never writes a tile twice; `out_dir` belongs to this manifest."""
+        fs, jpath, _ = self._fs(os.path.join(out_dir, "tiles"))
+        root = fs.makeQualified(jpath).toString()
+        live = {f"commit_id={c['commit_id']}" for c in self._commits()}
+        for parent in (root, *(os.path.join(self.root, t) for t in _SCHEMAS)):
+            fs, base, _ = self._fs(parent)
+            for st in fs.listStatus(base) if fs.exists(base) else []:
+                name = st.getPath().getName()
+                if name.startswith("commit_id=") and name not in live:
+                    fs.delete(st.getPath(), True)
+        cid = self._begin()
+        path = self._write("patches", tiles, cid, root, max_records)
+        images = Observation()
+        status = tiles.groupBy("image_id").agg(
+            F.lit("completed").alias("status"),
+            F.count(F.lit(1)).alias("kept"),
+            F.lit(0).cast("bigint").alias("discarded"),
+        )
+        self._write("images", status.observe(images, F.count(F.lit(1)).alias("n")), cid)
+        shards = self.spark.read.schema("split string").parquet(path).groupBy(
+            F.col("_metadata.file_name").alias("shard_id"), "split"
+        )
+        shards = shards.agg(
+            F.count(F.lit(1)).alias("n_records"),
+            F.max("_metadata.file_size").alias("size_bytes"),
+            F.lit("CLOSED").alias("status"),
+        )
+        self._write("shards", shards, cid)
+        record = {"tables": list(_SCHEMAS), "tiles": root, "work_key": work_key}
+        self._mark(os.path.join(self.root, "commits", cid), record)
+        return cid, images.get["n"]
 
     def read(self, table: str) -> DataFrame:
-        """Every committed row of `table`. A table with no commit reads as
-        an empty relation Catalyst can see (`PruneFilters` turns the false
-        filter into an empty LocalRelation), so the joins, aggregates and
-        anti-joins over it fold away and no task runs; the bare
-        `createDataFrame([])` would run as a Python-RDD stage."""
-        dirs = self._commit_dirs(table)
+        """Every committed row of `table`, commit_id read from the data
+        directory names. A table with no commit reads as an empty relation
+        Catalyst can see (`PruneFilters` turns the false filter into an
+        empty LocalRelation), so the joins, aggregates and anti-joins over
+        it fold away and no task runs; the bare `createDataFrame([])` would
+        run as a Python-RDD stage."""
+        schema, dirs = _SCHEMAS[table], {}  # table root -> commit dirs
+        for c in self._commits():
+            if table in c["tables"]:
+                root = c.get("tiles") if table == "patches" else None
+                root = root or os.path.join(self.root, table)
+                dirs.setdefault(root, []).append(os.path.join(root, f"commit_id={c['commit_id']}"))
         if not dirs:
-            return self.spark.createDataFrame([], _SCHEMAS[table]).where(F.lit(False))
-        return self.spark.read.schema(_SCHEMAS[table]).parquet(*dirs)
+            return self.spark.createDataFrame([], schema).where(F.lit(False))
+        scans = (
+            self.spark.read.option("basePath", r).schema(schema).parquet(*d) for r, d in dirs.items()
+        )
+        return reduce(DataFrame.unionByName, scans).select(*schema.fieldNames())
 
     # --- keyed work sets -----------------------------------------------------
 
@@ -154,7 +221,7 @@ class Manifest:
         df.select(*(F.col(f.name).cast(f.dataType) for f in WORK_SCHEMA)).write.mode(
             "error"
         ).parquet(path)
-        self._mark(path, key)
+        self._mark(path, {"work_key": key})
 
     # --- reference-parity views ---------------------------------------------
 
@@ -163,9 +230,10 @@ class Manifest:
         return self.read("patches").select("image_id", "tile_x", "tile_y").distinct()
 
     def _latest_status(self) -> DataFrame:
-        """(image_id, status) of each image's latest commit (max commit_id):
-        a resumed or retried image has one row per commit that touched it,
-        and only the last one says where it stands."""
+        """(image_id, status) of each image's latest commit (max commit_id,
+        which is the highest sequence number): a resumed or retried image
+        has one row per commit that touched it, and only the last one says
+        where it stands."""
         img = self.read("images")
         last = img.groupBy("image_id").agg(F.max("commit_id").alias("commit_id"))
         return img.join(last, ["image_id", "commit_id"]).select("image_id", "status")
@@ -188,7 +256,7 @@ class Manifest:
         shape): the done side is then an empty range, which runs in the JVM
         but which Catalyst, unlike the empty `read`, does not fold away."""
         keys = ["image_id", "tile_x", "tile_y"]
-        if self._commit_dirs("patches"):
+        if any("patches" in c["tables"] for c in self._commits()):
             done = self.completed_patches()
         else:
             done = self.spark.range(0).select(*(F.col("id").alias(k) for k in keys))
@@ -212,13 +280,10 @@ class Manifest:
         tiling_manifest.py:734-797): per-image kept totals vs patch rows vs
         shard record totals. Returns list of issue strings (empty == clean).
         """
-        # per-image `kept` rows are PER-COMMIT INCREMENTS (a killed run
-        # commits some of an image's tiles, the resume commits the rest,
-        # each with its own status row) — sum across all completed rows,
-        # not just each image's latest commit, or resumed images
-        # under-count (caught by the flagship lifecycle test). The three
-        # counters are one aggregate over the union of the three tables,
-        # fetched by one collect.
+        # per-image `kept` rows are PER-COMMIT INCREMENTS (a killed run and
+        # its resume each commit a status row for an image): sum every
+        # completed row, not each image's latest. The three counters are
+        # one aggregate over the union of the three tables, one collect.
         patch = F.struct("image_id", "tile_x", "tile_y").alias("patch")
         patches = self.read("patches").select(patch)
         kept = self.read("images").filter(F.col("status") == "completed").select("kept")
@@ -237,13 +302,9 @@ class Manifest:
 
         issues: list[str] = []
         if patch_total != image_kept:
-            issues.append(
-                f"patch rows ({patch_total}) != sum of per-image kept ({image_kept})"
-            )
+            issues.append(f"patch rows ({patch_total}) != sum of per-image kept ({image_kept})")
         if shard_records and shard_records != patch_total:
-            issues.append(
-                f"shard records ({shard_records}) != patch rows ({patch_total})"
-            )
+            issues.append(f"shard records ({shard_records}) != patch rows ({patch_total})")
         return issues
 
 

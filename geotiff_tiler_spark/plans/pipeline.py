@@ -34,25 +34,27 @@ tiler.py:182-386, mapped in SURVEY §3.1):
     call that computed the work set commits it from that checkpoint. A
     `limit_tiles` run commits the full set, then checkpoints its ordered,
     limited pending set once more (small).
-  WRITE: partitioned tile write (K1/K2 analog), then the patches, images
-    and shards commits (R1-R3), all reading the checkpoint rather than
-    re-running phases 1-3; the image count is observed during the images
-    commit and the shard delta is evaluated once, by its append.
+  WRITE: one commit (`Manifest.commit_tiles`, R1-R3) reads the checkpoint
+    rather than re-running phases 1-3: it writes each pending tile once,
+    to `out/tiles/commit_id=<id>/split=<s>/` (K1/K2), then the run's
+    per-image status rows and the shard rows of its own files, then ONE
+    marker. First it deletes whatever a killed call wrote without a marker.
 
-Commit order on a computing call: quarantine, work set, tiles, patches,
-images, shards. A call that finds its work set committed therefore finds
-its quarantine committed too, and a resume can never pick validation
-cells other than those of the run it resumes. Each run() is idempotent:
-completed (image, tile) pairs are skipped via the manifest flag, so a
-killed job resumes without recomputation and a no-op re-run commits
-nothing — the kill/resume test in tests/test_pipeline.py asserts zero
-duplicates and identical final state.
+Commit order on a computing call: quarantine, work set, run. A call that
+finds its work set committed therefore finds its quarantine committed too,
+and a resume can never pick validation cells other than those of the run it
+resumes. Each run() is idempotent: completed (image, tile) pairs are skipped
+via the manifest flag, so a killed job resumes without recomputation and a
+no-op re-run commits nothing — tests/test_crash_consistency.py kills calls
+at every commit boundary and by SIGKILL and asserts zero duplicates and the
+uninterrupted run's final state.
 Every checkpoint is released before create_tiles returns.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 from dataclasses import dataclass
 
@@ -63,6 +65,7 @@ from pyspark.sql import functions as F
 from geotiff_tiler_spark.operators import stats, tiling
 from geotiff_tiler_spark.operators.tiling import TilingParams
 from geotiff_tiler_spark.plans.manifest import Manifest
+from geotiff_tiler_spark.sources import checks
 
 
 @dataclass
@@ -141,8 +144,6 @@ def _analyse(
     # way failed_images does, tiler.py:427-439).
     cols = ["doc_id", "lang", "image_id", "px", "py"]
     if validate:
-        from geotiff_tiler_spark.sources import checks
-
         docs = checks.validate_pages(docs)
         cols.append("status")
     pts, _ = _materialize(held, tiling.doc_points(docs, params).select(*cols))
@@ -223,12 +224,9 @@ def create_tiles(
         if not reused:
             work = _analyse(docs, params, manifest, held, val_strategy, val_seed, validate)
 
-        # RESUME (F7): the work set is evaluated ONCE — read back, or
-        # geocode, grid stats, selector and split join — together with the
-        # manifest flag, in one eager local checkpoint (seven scalar
-        # columns per kept tile) that also observes the counts; the work
-        # commit and every write below read that checkpoint instead of
-        # re-running the plan.
+        # RESUME (F7): the work set and its manifest flag are evaluated ONCE,
+        # into one eager local checkpoint that also observes the counts; the
+        # work commit and the run commit read it instead of re-running.
         flagged, c = _materialize(
             held,
             manifest.flag_completed(work),
@@ -250,65 +248,8 @@ def create_tiles(
                 kept=0, skipped_resume=skipped, images=0, commit_id=None, work_reused=reused
             )
 
-        # WRITE: partitioned by split (K1); shard rotation via
-        # maxRecordsPerFile (K2 - the reference's 2 GiB cap expressed as the
-        # engine-level file-size bound); registry derived from committed
-        # files. Every write reads the checkpoint above.
-        writer = pending.write.mode("append").partitionBy("split")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.parquet(os.path.join(out_dir, "tiles"))
-        commit_id = manifest.append("patches", pending)
-
-        # per-image status rows: `kept` is THIS COMMIT's increment for the
-        # image (a resumed image gets one row per contributing run; A9 sums
-        # completed increments, the resume flag guarantees no tile is
-        # counted twice). A distributed aggregate, so the commit's file
-        # count follows the data, not defaultParallelism; the commit itself
-        # counts its rows, the run's image count.
-        per_img = pending.groupBy("image_id").agg(F.count(F.lit(1)).alias("kept"))
-        images = Observation()
-        status = per_img.select(
-            "image_id",
-            F.lit("completed").alias("status"),
-            F.col("kept"),
-            F.lit(0).cast("bigint").alias("discarded"),
-        ).observe(images, F.count(F.lit(1)).alias("n"))
-        manifest.append("images", status)
-
-        # shard registry from Spark's own committed-file metadata: the hidden
-        # `_metadata` column of the parquet scan exposes file name/size, and
-        # a per-file count gives real n_records — no filesystem walk, so this
-        # works identically on local disk, HDFS, and object stores. Only
-        # files not yet registered are appended (append-mode writes add new
-        # files; prior commits' shards are already in the manifest). The
-        # write above added at least one file, so the delta is never empty
-        # and is evaluated once, by the append. Only the partition column is
-        # read, so the scan needs no schema-inference job.
-        read_back = spark.read.schema("split string").parquet(
-            os.path.join(out_dir, "tiles")
-        )
-        registry = (
-            read_back.groupBy(
-                F.col("_metadata.file_name").alias("shard_id"), F.col("split")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_records"),
-                F.max(F.col("_metadata.file_size")).alias("size_bytes"),
-            )
-            .withColumn("status", F.lit("CLOSED"))
-            .select("shard_id", "split", "n_records", "size_bytes", "status")
-        )
-        existing = manifest.read("shards").select("shard_id").distinct()
-        manifest.append("shards", registry.join(existing, "shard_id", "left_anti"))
-
-        return TilingRun(
-            kept=n_pending,
-            skipped_resume=skipped,
-            images=images.get["n"],
-            commit_id=commit_id,
-            work_reused=reused,
-        )
+        cid, images = manifest.commit_tiles(out_dir, pending, max_records_per_file, key)
+        return TilingRun(n_pending, skipped, images, cid, work_reused=reused)
     finally:
         # local checkpointing truncates lineage, so release only once nothing
         # reads the checkpoints any more; DataFrame.unpersist does not reach
@@ -330,15 +271,13 @@ def retry_failed_images(
     attempt, stop early when nothing is failed. Task-level transient errors
     are already retried by Spark (spark.task.maxFailures); this covers
     app-level failures recorded in the manifest."""
-    from geotiff_tiler_spark.operators import tiling as _tiling
-
     runs: list[TilingRun] = []
     manifest = Manifest(spark, manifest_dir)
     for _attempt in range(max_retries):
         failed = manifest.failed_images()
         if failed.isEmpty():
             break
-        pts = _tiling.doc_points(docs, params)
+        pts = tiling.doc_points(docs, params)
         retry_docs = docs.join(
             pts.select("doc_id", "image_id").join(failed, "image_id", "left_semi").select("doc_id"),
             "doc_id",
@@ -370,8 +309,6 @@ def write_csv_index(tiles: DataFrame, out_dir: str) -> None:
 def export_normalization_stats(stats_df: DataFrame, path: str) -> dict:
     """K7 (reference tiler.py:388-420): final stats aggregate -> one JSON
     on the driver. The aggregate is tiny (rows = images x bands)."""
-    import json
-
     rows = [r.asDict() for r in stats_df.collect()]
     payload = {"normalization_stats": rows, "n_rows": len(rows)}
     tmp = path + ".tmp"

@@ -62,7 +62,7 @@ def clear_persistent_rdds(spark: SparkSession) -> int:
     """Unpersist every persisted RDD in the context; returns how many.
 
     localCheckpoint(eager=False) intermediates (dedup.ngram_jaccard_pairs,
-    knn ring rounds) persist bounded candidate-sized partitions that live
+    PageRank rounds) persist bounded candidate-sized partitions that live
     until the context dies. One query leaves a trivial footprint, but
     long-lived sessions that loop (bench sampling, check_contract's 40+
     queries) accumulate them — call this BETWEEN invocations, after the

@@ -3,9 +3,12 @@ visualization.py:43-58,271-275).
 
 The reference's only read-path "optimizer" is shard pruning via manifest
 shard_locations before opening tars. Spark equivalent: the output layout is
-partitioned by `split`, so a split filter becomes a PartitionFilters entry
-on the scan (verified in tests/test_plans.py); the manifest's shard table
-supports explicit file-level pruning when needed.
+`tiles/commit_id=<id>/split=<s>/`, one directory per run commit, so a
+split filter becomes a PartitionFilters entry on the scan (verified in
+tests/test_plans.py) and each row carries its `commit_id`; the manifest's
+shard table supports explicit file-level pruning when needed. A raw read
+also sees the files of a killed call until the next writing call deletes
+them; `Manifest.read("patches")` reads committed runs only.
 """
 
 from __future__ import annotations

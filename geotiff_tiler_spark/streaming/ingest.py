@@ -9,11 +9,11 @@ Two modes:
   per (window, image cell). Fully incremental, state bounded by the
   watermark horizon.
 - `foreach_batch_tiler`: micro-batch bridge into the batch engine — each
-  micro-batch runs the SAME tiling stages and commits through the SAME
-  manifest, so exactly-once per tile comes from the manifest anti-join
-  (identical to the reference's is_patch_completed check,
-  tiler.py:781-784), not from sink-specific transactions. A replayed
-  micro-batch is a no-op.
+  micro-batch runs the SAME tiling stages and is ONE run commit of the SAME
+  manifest (`Manifest.commit_tiles`), so exactly-once per tile comes from
+  the manifest anti-join (identical to the reference's is_patch_completed
+  check, tiler.py:781-784), not from sink-specific transactions. A
+  replayed micro-batch is a no-op.
 """
 
 from __future__ import annotations
@@ -82,10 +82,8 @@ def foreach_batch_tiler(params: TilingParams, out_dir: str, manifest_dir: str):
             "image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px"
         )
         pending = manifest.filter_pending(work)
-        if pending.isEmpty():
-            return
-        pending.write.mode("append").partitionBy("split").parquet(f"{out_dir}/tiles")
-        manifest.append("patches", pending)
+        if not pending.isEmpty():
+            manifest.commit_tiles(out_dir, pending)
 
     return _process
 

@@ -1,7 +1,7 @@
 """Spark-free guards against dead code and stale commands.
 
-Every top-level ``def`` and ``class`` in the engine package must be named
-somewhere outside its own body -- in the engine, the tests, the tools, the
+Every top-level ``def``, ``class`` and assigned (non-dunder) name in the
+engine package must be named somewhere outside its own statement -- in the engine, the tests, the tools, the
 benchmark or ``__spark_entry__.py`` -- and every ``python <path>`` command
 the contributor docs give must name a file that exists.
 """
@@ -49,9 +49,28 @@ def _references(tree: ast.AST):
                 yield alias.name.rsplit(".", 1)[-1], node.lineno
 
 
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines: a def/class name, or the plain
+    names an assignment binds (dunders such as ``__version__`` excluded)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and not (n.id.startswith("__") and n.id.endswith("__"))
+    ]
+
+
 def dead_definitions() -> list[str]:
-    """``module:name`` of each top-level engine def/class named nowhere but
-    inside its own body."""
+    """``module:name`` of each top-level engine def/class/assigned name
+    named nowhere but inside its own statement."""
     trees = {p: _parse(p) for rel in SCANNED for p in _py_files(rel)}
     refs: dict[str, list[tuple[str, int]]] = {}
     for path, tree in trees.items():
@@ -63,15 +82,14 @@ def dead_definitions() -> list[str]:
         if not path.startswith(pkg + os.sep):
             continue
         for node in tree.body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            outside = [
-                (p, ln) for p, ln in refs.get(node.name, ())
-                if p != path or not first <= ln <= node.end_lineno
-            ]
-            if not outside:
-                dead.append(f"{os.path.relpath(path, ROOT)}:{node.name}")
+            first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
+            for name in _defined_names(node):
+                outside = [
+                    (p, ln) for p, ln in refs.get(name, ())
+                    if p != path or not first <= ln <= node.end_lineno
+                ]
+                if not outside:
+                    dead.append(f"{os.path.relpath(path, ROOT)}:{name}")
     return dead
 
 

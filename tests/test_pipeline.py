@@ -8,6 +8,7 @@
 
 import os
 import shutil
+import time
 import uuid
 
 import pytest
@@ -149,6 +150,55 @@ def _with_jobs(spark, fn):
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _with_sql_executions(spark, fn):
+    """(fn(), SQL executions it ran): those whose id is above the largest id
+    the status store held before the call. A difference of
+    executionsCount() goes wrong once the store evicts old executions."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    last = max(ids(), default=-1)
+    out = fn()
+    return out, sum(1 for i in ids() if i > last)
+
+
+def test_resume_runs_few_sql_executions(spark, docs, tmp_path_factory):
+    """A resume call runs the fingerprint, the flag checkpoint and one run
+    commit (tile, status and shard writes): 5 SQL executions, where a
+    second copy of the tiles in the manifest made it 6."""
+    base = str(tmp_path_factory.mktemp("resumesql"))
+    create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf", limit_tiles=7)
+    run, executions = _with_sql_executions(
+        spark, lambda: create_tiles(spark, docs, P, f"{base}/out", f"{base}/mf")
+    )
+    assert run.work_reused and run.kept > 0
+    assert executions <= 5, executions
+
+
+def test_commit_order_does_not_follow_the_clock(spark, tmp_path, monkeypatch):
+    """An image's latest status is that of its latest commit even when the
+    wall clock steps back between the two commits."""
+    m = Manifest(spark, str(tmp_path))
+
+    def status(s):
+        return spark.createDataFrame(
+            [(1, s, 0, 0)], "image_id long, status string, kept long, discarded long"
+        )
+
+    with monkeypatch.context() as mp:
+        mp.setattr(time, "time", lambda: 2_000_000_000.0)
+        m.append("images", status("failed"))
+        mp.setattr(time, "time", lambda: 1_000_000_000.0)
+        m.append("images", status("completed"))
+    assert [r.image_id for r in m.completed_images().collect()] == [1]
+    assert m.failed_images().count() == 0
 
 
 def test_resume_evaluates_work_set_once(spark, docs, tmp_path_factory):
