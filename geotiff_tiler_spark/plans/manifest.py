@@ -15,14 +15,14 @@ and the `c` keeps partition inference reading it as a string.
 Tables (every row carries its commit_id):
   patches/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px) — the
     committed tile files themselves, `<tiles>/commit_id=<id>/split=<s>/`:
-    a run's `out/tiles` (`commit_tiles`), or the manifest's own `patches/`
+    a run's `out/tiles` (`commit_run`), or the manifest's own `patches/`
     (`append`)
-  images/  : (image_id, status, kept, discarded)
+  images/  : (image_id, status, kept, discarded), failed rows included
   shards/  : (shard_id, split, n_records, size_bytes, status), one row per
-    tile file
-  work/<key>/ : (image_id, tile_x, tile_y, split, point_cnt, nonzero_px) —
-    one run's full tiling work set, addressed by its input fingerprint
-    `key` rather than by a commit id; its own marker, written once.
+    tile file, keyed by (split, shard_id): one task writes the same
+    part-file name under both splits
+  work/    : a computing run's full tiling work set (the patch columns but
+    commit_id); `work_set` finds it by the `work_key` of its marker
 """
 
 from __future__ import annotations
@@ -71,7 +71,7 @@ SHARD_SCHEMA = sqltypes.StructType(
 
 WORK_SCHEMA = sqltypes.StructType(PATCH_SCHEMA.fields[:-1])
 
-_SCHEMAS = {"patches": PATCH_SCHEMA, "images": IMAGE_SCHEMA, "shards": SHARD_SCHEMA}
+_SCHEMAS = dict(patches=PATCH_SCHEMA, images=IMAGE_SCHEMA, shards=SHARD_SCHEMA, work=WORK_SCHEMA)
 
 
 class Manifest:
@@ -141,14 +141,15 @@ class Manifest:
         self._mark(os.path.join(self.root, "commits", cid), {"tables": [table]})
         return cid
 
-    def commit_tiles(self, out_dir: str, tiles: DataFrame, max_records=None, work_key=None):
-        """One run's commit (R1-R3), returning (commit id, images): its
+    def commit_run(self, out_dir, tiles, work=None, failed=None, max_records=None, work_key=None):
+        """One call's commit (R1-R3), returning (commit id, images): its
         tiles, written once to `out_dir/tiles/commit_id=<id>/`, per-image
-        status rows (`kept` is this commit's increment, which A9 sums), the
-        shard rows of its own tile files (one `_metadata` aggregate: file
-        name and size plus a per-file count), then the marker. First it
-        deletes the data of commits that never got a marker, so a resume
-        never writes a tile twice; `out_dir` belongs to this manifest."""
+        status rows (`kept` is this commit's increment, which A9 sums) plus
+        the `failed` rows, the shard rows of its own tile files (one
+        `_metadata` aggregate), the `work` set, then the marker; None is
+        not written. First it deletes the data of commits that never got a
+        marker, so a resume never writes a tile twice; `out_dir` belongs to
+        this manifest."""
         fs, jpath, _ = self._fs(os.path.join(out_dir, "tiles"))
         root = fs.makeQualified(jpath).toString()
         live = {f"commit_id={c['commit_id']}" for c in self._commits()}
@@ -158,27 +159,33 @@ class Manifest:
                 name = st.getPath().getName()
                 if name.startswith("commit_id=") and name not in live:
                     fs.delete(st.getPath(), True)
-        cid = self._begin()
-        path = self._write("patches", tiles, cid, root, max_records)
-        images = Observation()
-        status = tiles.groupBy("image_id").agg(
-            F.lit("completed").alias("status"),
-            F.count(F.lit(1)).alias("kept"),
-            F.lit(0).cast("bigint").alias("discarded"),
-        )
-        self._write("images", status.observe(images, F.count(F.lit(1)).alias("n")), cid)
-        shards = self.spark.read.schema("split string").parquet(path).groupBy(
-            F.col("_metadata.file_name").alias("shard_id"), "split"
-        )
-        shards = shards.agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.max("_metadata.file_size").alias("size_bytes"),
-            F.lit("CLOSED").alias("status"),
-        )
-        self._write("shards", shards, cid)
-        record = {"tables": list(_SCHEMAS), "tiles": root, "work_key": work_key}
+        cid, images = self._begin(), Observation()
+        rows = {"patches": tiles, "images": failed, "shards": None, "work": work}
+        if tiles is not None:
+            path = self._write("patches", tiles, cid, root, max_records)
+            counts = tiles.groupBy("image_id").agg(
+                F.lit("completed").alias("status"),
+                F.count(F.lit(1)).alias("kept"),
+                F.lit(0).cast("bigint").alias("discarded"),
+            ).observe(images, F.count(F.lit(1)).alias("n"))
+            rows["images"] = counts if failed is None else counts.unionByName(failed)
+            shards = self.spark.read.schema("split string").parquet(path).groupBy(
+                F.col("_metadata.file_name").alias("shard_id"), "split"
+            )
+            rows["shards"] = shards.agg(
+                F.count(F.lit(1)).alias("n_records"),
+                F.max("_metadata.file_size").alias("size_bytes"),
+                F.lit("CLOSED").alias("status"),
+            )
+        if work is not None:
+            rows["work"] = work.select(*(F.col(f.name).cast(f.dataType) for f in WORK_SCHEMA))
+        for table in ("images", "shards", "work"):
+            if rows[table] is not None:
+                self._write(table, rows[table], cid)
+        tables = [t for t, df in rows.items() if df is not None]
+        record = {"tables": tables, "tiles": root, "work_key": work_key}
         self._mark(os.path.join(self.root, "commits", cid), record)
-        return cid, images.get["n"]
+        return cid, images.get["n"] if tiles is not None else 0
 
     def read(self, table: str) -> DataFrame:
         """Every committed row of `table`, commit_id read from the data
@@ -200,28 +207,14 @@ class Manifest:
         )
         return reduce(DataFrame.unionByName, scans).select(*schema.fieldNames())
 
-    # --- keyed work sets -----------------------------------------------------
-
     def work_set(self, key: str) -> DataFrame | None:
-        """The work set committed under `key`, or None when there is none
-        (never written, or a killed write without its marker)."""
-        path = os.path.join(self.root, "work", key)
-        fs, jpath, jvm = self._fs(path)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(jpath, "_COMMITTED")):
-            return None
-        return self.spark.read.schema(WORK_SCHEMA).parquet(path)
-
-    def commit_work(self, key: str, df: DataFrame) -> None:
-        """Commit `df` as the work set under `key`. Called only when
-        `work_set(key)` is None, so a directory already there is a killed
-        write: it is deleted and written again."""
-        path = os.path.join(self.root, "work", key)
-        fs, jpath, _ = self._fs(path)
-        fs.delete(jpath, True)
-        df.select(*(F.col(f.name).cast(f.dataType) for f in WORK_SCHEMA)).write.mode(
-            "error"
-        ).parquet(path)
-        self._mark(path, {"work_key": key})
+        """The work set committed with `key` as its marker's work key, or
+        None when no marked commit holds one."""
+        for c in self._commits():
+            if c.get("work_key") == key and "work" in c["tables"]:
+                path = os.path.join(self.root, "work", f"commit_id={c['commit_id']}")
+                return self.spark.read.schema(WORK_SCHEMA).parquet(path)
+        return None
 
     # --- reference-parity views ---------------------------------------------
 

@@ -20,33 +20,32 @@ tiler.py:182-386, mapped in SURVEY §3.1):
   PHASE 3 (tiling): stride-grid explode (W1) -> per-tile label stats ->
     patch filter (F1) -> split assignment (J9 with the selected cells).
   RESUME (F7): the work set (every kept tile with its split, point_cnt
-    and nonzero_px) is computed once per input and committed in the
-    manifest under `work/<key>/`. The key is a sha1 over a format version,
-    a fingerprint of the docs (one aggregate job: the row count plus two
-    order-independent sums of differently salted xxhash64 row hashes over
-    the columns read here, each hashed with its null flag), the
-    TilingParams, val_strategy, val_seed and validate. A call whose key is
-    committed (a resume or a no-op re-run on the same inputs) reads the
+    and nonzero_px) is computed once per input and committed with the run
+    that computed it, under a key its marker records. The key is a sha1 over
+    a format version, a fingerprint of the docs (one aggregate job: the row
+    count plus two order-independent sums of differently salted xxhash64
+    row hashes over the columns read here, each hashed with its null flag),
+    the TilingParams, val_strategy, val_seed and validate. A call whose key
+    is committed (a resume or a no-op re-run on the same inputs) reads the
     work set back and skips validation and phases 1-3; any other call runs
     them. Either way the work tiles are then flagged done/pending against
     the manifest's committed patches and materialized ONCE, as an eager
-    local checkpoint that also observes the total and skipped counts; a
-    call that computed the work set commits it from that checkpoint. A
-    `limit_tiles` run commits the full set, then checkpoints its ordered,
-    limited pending set once more (small).
-  WRITE: one commit (`Manifest.commit_tiles`, R1-R3) reads the checkpoint
-    rather than re-running phases 1-3: it writes each pending tile once,
-    to `out/tiles/commit_id=<id>/split=<s>/` (K1/K2), then the run's
-    per-image status rows and the shard rows of its own files, then ONE
-    marker. First it deletes whatever a killed call wrote without a marker.
+    local checkpoint that also observes the total and skipped counts. A
+    `limit_tiles` run checkpoints its ordered, limited pending set once
+    more (small).
+  WRITE: ONE commit per writing call (`Manifest.commit_run`, R1-R3) reads
+    the checkpoints rather than re-running phases 1-3: each pending tile
+    once, to `out/tiles/commit_id=<id>/split=<s>/` (K1/K2), the status rows
+    with the new quarantine rows, the shard rows of its own files and a
+    computed work set, then ONE marker. First it deletes whatever a killed
+    call wrote without a marker.
 
-Commit order on a computing call: quarantine, work set, run. A call that
-finds its work set committed therefore finds its quarantine committed too,
-and a resume can never pick validation cells other than those of the run it
-resumes. Each run() is idempotent: completed (image, tile) pairs are skipped
-via the manifest flag, so a killed job resumes without recomputation and a
-no-op re-run commits nothing — tests/test_crash_consistency.py kills calls
-at every commit boundary and by SIGKILL and asserts zero duplicates and the
+A call that finds its work set therefore finds its quarantine too, and a
+resume never picks validation cells other than those of the run it resumes.
+Each run() is idempotent: completed (image, tile) pairs are skipped via the
+manifest flag, so a killed job resumes without recomputation and a no-op
+re-run commits nothing — tests/test_crash_consistency.py kills calls at
+every commit boundary and by SIGKILL and asserts zero duplicates and the
 uninterrupted run's final state.
 Every checkpoint is released before create_tiles returns.
 """
@@ -132,9 +131,10 @@ def _analyse(
     val_strategy: str,
     val_seed: int | None,
     validate: bool,
-) -> DataFrame:
-    """Validation (committing the quarantine) and phases 1-3: the lazy
-    work set (image_id, tile_x, tile_y, split, point_cnt, nonzero_px).
+) -> tuple[DataFrame, DataFrame | None]:
+    """Validation and phases 1-3, lazy: the work set (image_id, tile_x,
+    tile_y, split, point_cnt, nonzero_px) and the quarantine's new failed
+    status rows (None without validation).
 
     The docs are scanned once: validation and geocoding are evaluated into
     one narrow checkpoint that the quarantine, the analysis aggregates and
@@ -147,25 +147,18 @@ def _analyse(
         docs = checks.validate_pages(docs)
         cols.append("status")
     pts, _ = _materialize(held, tiling.doc_points(docs, params).select(*cols))
+    failed = None
     if validate:
         pts, quarantine = checks.split_quarantine(pts)
-        # Only ids the manifest does not already list as failed are
-        # committed, so a re-run adds no commit.
-        new_failed, q = _materialize(
-            held,
-            quarantine.select(F.col("doc_id").alias("image_id")).join(
-                manifest.failed_images(), "image_id", "left_anti"
-            ),
-            n=F.count(F.lit(1)),
+        # ids the manifest already lists as failed are not written again
+        failed = quarantine.select(F.col("doc_id").alias("image_id")).join(
+            manifest.failed_images(), "image_id", "left_anti"
+        ).select(
+            "image_id",
+            F.lit("failed").alias("status"),
+            F.lit(0).cast("bigint").alias("kept"),
+            F.lit(0).cast("bigint").alias("discarded"),
         )
-        if q["n"]:
-            qrows = new_failed.select(
-                "image_id",
-                F.lit("failed").alias("status"),
-                F.lit(0).cast("bigint").alias("kept"),
-                F.lit(0).cast("bigint").alias("discarded"),
-            )
-            manifest.append("images", qrows)
 
     # PHASE 1: analysis aggregates
     grid_dists = stats.grid_cell_distributions(pts, params)
@@ -190,7 +183,7 @@ def _analyse(
     # table
     tiles = tiling.kept_tiles(pts, params)
     split = tiling.assign_split_by_cells(tiles, params, val_cells)
-    return split.select("image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px")
+    return split.select("image_id", "tile_x", "tile_y", "split", "point_cnt", "nonzero_px"), failed
 
 
 def create_tiles(
@@ -209,7 +202,7 @@ def create_tiles(
 
     limit_tiles simulates a mid-job kill for resume tests: only the first
     N pending tiles (deterministic order) are processed and committed;
-    limit_tiles=0 stops right after the work-set commit.
+    limit_tiles=0 on a first call commits only its work set and quarantine.
     validate=True runs the S7 validation stage first and quarantines
     invalid rows into the manifest (as data, not exceptions).
     max_records_per_file bounds output shard size (K2 rotation analog).
@@ -219,22 +212,20 @@ def create_tiles(
     held: list[DataFrame] = []  # eager local checkpoints, released on return
 
     try:
-        work = manifest.work_set(key)
+        work, failed = manifest.work_set(key), None
         reused = work is not None
         if not reused:
-            work = _analyse(docs, params, manifest, held, val_strategy, val_seed, validate)
+            work, failed = _analyse(docs, params, manifest, held, val_strategy, val_seed, validate)
 
         # RESUME (F7): the work set and its manifest flag are evaluated ONCE,
         # into one eager local checkpoint that also observes the counts; the
-        # work commit and the run commit read it instead of re-running.
+        # run commit reads it instead of re-running.
         flagged, c = _materialize(
             held,
             manifest.flag_completed(work),
             total=F.count(F.lit(1)),
             skipped=F.count(F.when(F.col("done"), 1)),
         )
-        if not reused:
-            manifest.commit_work(key, flagged)
         skipped = c["skipped"]
         n_pending = c["total"] - skipped
         pending = flagged.filter(~F.col("done")).drop("done")
@@ -243,12 +234,17 @@ def create_tiles(
             pending, _ = _materialize(
                 held, pending.orderBy("image_id", "tile_x", "tile_y").limit(limit_tiles)
             )
-        if n_pending == 0:
-            return TilingRun(
-                kept=0, skipped_resume=skipped, images=0, commit_id=None, work_reused=reused
-            )
+        if reused and n_pending == 0:
+            return TilingRun(0, skipped, 0, None, work_reused=True)
 
-        cid, images = manifest.commit_tiles(out_dir, pending, max_records_per_file, key)
+        cid, images = manifest.commit_run(
+            out_dir,
+            pending if n_pending else None,
+            None if reused else flagged,
+            failed,
+            max_records_per_file,
+            key,
+        )
         return TilingRun(n_pending, skipped, images, cid, work_reused=reused)
     finally:
         # local checkpointing truncates lineage, so release only once nothing

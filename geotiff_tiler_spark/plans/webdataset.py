@@ -181,15 +181,18 @@ def write_webdataset(
 def read_webdataset(spark, out_dir: str) -> DataFrame:
     """Read tar shards back as (split, shard, key, member, payload) rows.
 
-    Plan: binaryFile scan over */*.tar (one task per shard — shards are
-    the parallelism unit, like any WebDataset loader) + an Arrow-batched
-    untar. Used for S9-style read-back validation and the roundtrip tests.
+    Plan: binaryFile scan of the *.tar files under `out_dir`, filtered by
+    name (a glob path logs a FileNotFoundException from Spark's sink-metadata
+    probe); one task per shard — shards are the parallelism unit, like any
+    WebDataset loader — plus an Arrow-batched untar. Used for S9-style
+    read-back validation and the roundtrip tests.
     """
     import os
 
     import pandas as pd
 
-    files = spark.read.format("binaryFile").load(f"{out_dir}/*/*.tar")
+    tars = {"recursiveFileLookup": "true", "pathGlobFilter": "*.tar"}
+    files = spark.read.format("binaryFile").options(**tars).load(out_dir)
 
     def _untar(batches):
         for pdf in batches:

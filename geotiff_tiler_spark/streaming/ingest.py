@@ -10,7 +10,7 @@ Two modes:
   watermark horizon.
 - `foreach_batch_tiler`: micro-batch bridge into the batch engine — each
   micro-batch runs the SAME tiling stages and is ONE run commit of the SAME
-  manifest (`Manifest.commit_tiles`), so exactly-once per tile comes from
+  manifest (`Manifest.commit_run`), so exactly-once per tile comes from
   the manifest anti-join (identical to the reference's is_patch_completed
   check, tiler.py:781-784), not from sink-specific transactions. A
   replayed micro-batch is a no-op.
@@ -83,7 +83,7 @@ def foreach_batch_tiler(params: TilingParams, out_dir: str, manifest_dir: str):
         )
         pending = manifest.filter_pending(work)
         if not pending.isEmpty():
-            manifest.commit_tiles(out_dir, pending)
+            manifest.commit_run(out_dir, pending)
 
     return _process
 

@@ -1,12 +1,14 @@
 """Crash consistency of a tiling run (R1-R3, F7).
 
-A `create_tiles` call is killed at each commit boundary -- before its tile
-write, in the middle of it, after it but before the marker, and right after
-the marker -- by monkeypatching the writer and the marker, and at random
-moments by SIGKILL of a child process. From every kill point the next call
-must reach the tiles of an uninterrupted run, with no duplicate file, a
+A `create_tiles` call (a resume, or a first call that also commits its
+work set and quarantine) is killed at each commit boundary -- before its
+tile write, in the middle of it, after it but before the marker, and right
+after the marker -- by monkeypatching the writer and the marker, and at
+random moments by SIGKILL of a child process. From every kill point the next
+call must reach the tiles of an uninterrupted run, with no duplicate file, a
 shard registry that lists exactly the files on disk, and a clean
-`consistency_report()`.
+`consistency_report()`; a first call killed before its marker leaves no
+commit at all.
 """
 
 import os
@@ -24,6 +26,7 @@ from geotiff_tiler_spark.plans.manifest import Manifest
 from geotiff_tiler_spark.plans.pipeline import create_tiles
 
 from conftest import SF_DIR
+from test_pipeline import _pages_with_one_invalid
 
 P = TilingParams(label_threshold=None)
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -97,25 +100,66 @@ def _kill_at(monkeypatch, boundary, out_dir):
     monkeypatch.setattr(Manifest, "_mark", marker)
 
 
-@pytest.mark.parametrize("boundary", ["before_write", "mid_write", "before_marker", "after_marker"])
+def _failed(spark, mf):
+    return sorted(r.image_id for r in Manifest(spark, mf).failed_images().collect())
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_validated(spark, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("uninterrupted-validated"))
+    vdocs = _pages_with_one_invalid(spark)
+    create_tiles(spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True)
+    assert _failed(spark, f"{base}/mf") == [100000]
+    return _tiles(spark, f"{base}/out")
+
+
+BOUNDARIES = ["before_write", "mid_write", "before_marker", "after_marker"]
+
+
+@pytest.mark.parametrize(
+    "boundary,first_call",
+    [pytest.param(b, False, id=b) for b in BOUNDARIES]
+    + [pytest.param(b, True, id=f"first_call-{b}") for b in BOUNDARIES],
+)
 def test_kill_at_commit_boundary_then_resume(
-    spark, docs, uninterrupted, tmp_path_factory, monkeypatch, boundary
+    spark,
+    docs,
+    uninterrupted,
+    uninterrupted_validated,
+    tmp_path_factory,
+    monkeypatch,
+    boundary,
+    first_call,
 ):
-    """A resume call is killed at `boundary`; the next call completes the
-    run without writing any tile twice."""
+    """A call is killed at `boundary`; the next call completes the run
+    without writing any tile twice. The killed call is a resume, or a first
+    call with validation stopped at 7 tiles, whose one commit carries its
+    work set and quarantine too: killed before its marker, it leaves no
+    commit, so no failed id shows and the next call analyses again."""
     base = str(tmp_path_factory.mktemp(f"kill-{boundary}"))
     out, mf = f"{base}/out", f"{base}/mf"
-    first = create_tiles(spark, docs, P, out, mf, limit_tiles=7)
-    assert first.kept == 7
+    marked = boundary == "after_marker"
+    if first_call:
+        docs, want = _pages_with_one_invalid(spark), uninterrupted_validated
+        failed, limit = [100000], 7
+        committed = 7 if marked else 0
+    else:
+        want, failed, limit = uninterrupted, [], None
+        assert create_tiles(spark, docs, P, out, mf, limit_tiles=7).kept == 7
+        committed = len(want) if marked else 7
     with monkeypatch.context() as mp:
         _kill_at(mp, boundary, out)
         with pytest.raises(Killed):
-            create_tiles(spark, docs, P, out, mf)
-    last = create_tiles(spark, docs, P, out, mf)
-    committed = len(uninterrupted) if boundary == "after_marker" else 7
+            create_tiles(spark, docs, P, out, mf, validate=first_call, limit_tiles=limit)
+    markers = [f for _, _, files in os.walk(mf) for f in files if f == "_COMMITTED"]
+    assert len(markers) == (not first_call) + marked
+    assert _failed(spark, mf) == (failed if marked else [])
+    last = create_tiles(spark, docs, P, out, mf, validate=first_call)
+    assert last.work_reused == (marked or not first_call)
     assert last.skipped_resume == committed
-    assert committed + last.kept == len(uninterrupted)
-    _assert_recovered(spark, base, uninterrupted)
+    assert committed + last.kept == len(want)
+    _assert_recovered(spark, base, want)
+    assert _failed(spark, mf) == failed
 
 
 _CHILD = """

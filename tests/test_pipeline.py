@@ -6,6 +6,8 @@
 - consistency validator (A9) is clean after a complete run.
 """
 
+import glob
+import json
 import os
 import shutil
 import time
@@ -182,6 +184,24 @@ def test_resume_runs_few_sql_executions(spark, docs, tmp_path_factory):
     assert executions <= 5, executions
 
 
+def test_first_call_runs_few_sql_executions(spark, tmp_path_factory):
+    """A first call with validation, killed by limit_tiles, runs the
+    fingerprint, the docs-points checkpoint, the two analysis collects, the
+    flag and limit checkpoints and ONE commit (tile, status, shard and work
+    writes): 10 SQL executions, where a separate quarantine commit and
+    work-set commit made it 12."""
+    base = str(tmp_path_factory.mktemp("firstsql"))
+    vdocs = _pages_with_one_invalid(spark)
+    run, executions = _with_sql_executions(
+        spark,
+        lambda: create_tiles(
+            spark, vdocs, P, f"{base}/out", f"{base}/mf", validate=True, limit_tiles=7
+        ),
+    )
+    assert not run.work_reused and run.kept == 7
+    assert executions <= 10, executions
+
+
 def test_commit_order_does_not_follow_the_clock(spark, tmp_path, monkeypatch):
     """An image's latest status is that of its latest commit even when the
     wall clock steps back between the two commits."""
@@ -256,6 +276,18 @@ def _shard_files(spark, run_dir):
     return on_disk, sorted((r.split, r.shard_id) for r in shards)
 
 
+def _work_commit(mf_dir, key):
+    """(data directory, marker) of the commit that holds the work set under
+    `key`, or (None, None)."""
+    for marker in glob.glob(f"{mf_dir}/commits/*/_COMMITTED"):
+        with open(marker) as fh:
+            record = json.load(fh)
+        if record.get("work_key") == key and "work" in record["tables"]:
+            cid = os.path.basename(os.path.dirname(marker))
+            return f"{mf_dir}/work/commit_id={cid}", marker
+    return None, None
+
+
 def test_kill_after_work_commit_resumes_from_it(spark, docs, tmp_path_factory):
     """A call killed after the work-set commit but before any tile write
     (limit_tiles=0 stops there) leaves a committed work set; the resume
@@ -266,7 +298,7 @@ def test_kill_after_work_commit_resumes_from_it(spark, docs, tmp_path_factory):
     assert r0.kept == 0 and r0.skipped_resume == 0 and not r0.work_reused
     assert not os.path.exists(f"{base}/part/out/tiles")
     key = work_key(docs, P, "spatial", 42, False)
-    assert os.path.exists(f"{base}/part/mf/work/{key}/_COMMITTED")
+    assert os.path.exists(_work_commit(f"{base}/part/mf", key)[1])
 
     r1 = create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf")
     assert r1.work_reused and r1.skipped_resume == 0 and r1.kept == full.kept
@@ -285,16 +317,18 @@ def test_unmarked_work_dir_is_recomputed(spark, docs, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("workkill"))
     full = create_tiles(spark, docs, P, f"{base}/full/out", f"{base}/full/mf")
     create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf", limit_tiles=0)
-    wdir = f"{base}/part/mf/work/{work_key(docs, P, 'spatial', 42, False)}"
+    key = work_key(docs, P, "spatial", 42, False)
+    wdir, marker = _work_commit(f"{base}/part/mf", key)
     # the killed write: no marker, and only some of its files
-    os.remove(f"{wdir}/_COMMITTED")
+    os.remove(marker)
     parts = sorted(f for f in os.listdir(wdir) if f.endswith(".parquet"))
     for f in parts[: max(1, len(parts) // 2)]:
         os.remove(os.path.join(wdir, f))
 
     r1 = create_tiles(spark, docs, P, f"{base}/part/out", f"{base}/part/mf")
     assert not r1.work_reused and r1.kept == full.kept
-    assert os.path.exists(f"{wdir}/_COMMITTED")
+    wdir, marker = _work_commit(f"{base}/part/mf", key)
+    assert os.path.exists(marker)
     assert spark.read.parquet(wdir).count() == full.kept
     assert _collect_tiles(spark, f"{base}/part/out") == _collect_tiles(
         spark, f"{base}/full/out"
@@ -405,7 +439,7 @@ def test_analyse_work_set_runs_no_python(spark, tmp_path_factory):
     m = Manifest(spark, str(tmp_path_factory.mktemp("nopython")))
     held = []
     try:
-        work = _analyse(_pages_with_one_invalid(spark), P, m, held, "spatial", 42, True)
+        work, _ = _analyse(_pages_with_one_invalid(spark), P, m, held, "spatial", 42, True)
         qe = work._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):

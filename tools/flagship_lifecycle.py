@@ -52,6 +52,10 @@ def run_lifecycle(spark, docs, base_dir: str, kill_after: int = 7) -> dict:
     # run 1 computes and commits the work set; the resume and the no-op
     # read it back instead of re-running the analysis
     assert not r1.work_reused and r2.work_reused and r3.work_reused, (r1, r2, r3)
+    # one commit per writing call (the killed run's and the resume's); the
+    # work set rides in run 1's commit and the no-op commits nothing
+    markers = [f for _, _, files in os.walk(mf_dir) for f in files if f == "_COMMITTED"]
+    assert len(markers) == 2, markers
 
     # 2) A9 consistency: the three manifest-side counters
     manifest = Manifest(spark, mf_dir)
